@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -37,18 +37,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Conf.engineDefaults is currently EMPTY (the r14 cached-plan-AQE
-    // candidate was A/B'd and rejected — numbers in Conf.scala; the win
-    // ships as per-artifact sizing in ops.Parts instead). The wrapper
-    // stays so a future measured engine conf lands in ONE place.
-    val spark = Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // No global engine confs: the r14 cached-plan-AQE candidate was
+    // A/B'd and rejected (OPTIMIZATION_r14.md); its win ships as
+    // per-artifact sizing in ops.Parts instead.
+    val spark = Conf.localSession()
     val totals = new Totals
     spark.sparkContext.addSparkListener(totals)
     // Micro-batch trigger counter: the stream_* family's wall is

@@ -40,41 +40,30 @@ object Conf {
       "spark.sql.adaptive.skewJoin.enabled" -> "true")
   }
 
-  /** Engine defaults every driver entrypoint applies (Bench, Verify,
-    * the Prof and plan-dump mains) — currently EMPTY, kept as the one
-    * place a measured global engine conf would land.
+  /** The one local session every `main` in this package runs on:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with shuffle partitions set
+    * to that CPU count, a UTC session zone, the UI off and Spark logging
+    * at WARN. `extra` confs are applied last and win — ProfQuery passes
+    * its partition count, tier profile and ad-hoc confs this way.
     *
-    * Measured and REJECTED here (r14, full 228-query bench, sf0.1,
-    * local[32], interleaved off/on/off/on pairs to defeat box drift):
-    *
-    *  - `canChangeCachedPlanOutputPartitioning=true` (+ a 256k
-    *    `coalescePartitions.minPartitionSize` floor): lets AQE size
-    *    partitions inside `.cache()`d plans. Collapses the per-task
-    *    fixed cost of every stage re-scanning a memoized artifact
-    *    (paired min-medians: dedup_quality_report 0.82→0.51 s,
-    *    dedup_lsh_curve_capped 0.63→0.31, dedup_cross_source
-    *    0.47→0.29; task_total −18 %) — but byte-based coalescing
-    *    cannot see COMPUTE density, so it serialized byte-light
-    *    expensive stages elsewhere: text_repetition task 2.25→12.5 s
-    *    (wall 0.78→1.16), text_bm25 task 1.1→3.2, a28_hll_distinct
-    *    0.29→0.53 s, and the stream family's cached static join sides
-    *    coalesced under micro-batches (8 stream queries +0.2–0.5 s
-    *    each). Paired geomean 0.983 — a wash that trades one query
-    *    family against another. Rejected as a global; the same win is
-    *    taken surgically instead by sizing the artifact CACHES
-    *    themselves at build time ([[graft.ops.Parts]]), which touches
-    *    only the paths that measured faster.
+    * No `withExtensions` here on purpose: the graft planner rules and
+    * SQL functions install lazily on first use ([[graft.plans.AsOf]]'s
+    * joins, the `*Rewrite.install` hooks), as they do in sessions the
+    * library does not own, so Verify checks the same planner
+    * configuration the benchmark measures.
     */
-  val engineDefaults: Map[String, String] = Map.empty
-
-  /** Fold [[engineDefaults]] into a session builder (explicit
-    * `.config()` calls made later still win). `GRAFT_ENGINE_DEFAULTS=off`
-    * skips them — the A/B escape used to dump the before/after plan
-    * evidence; every driver path leaves it unset.
-    */
-  def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    if (sys.env.get("GRAFT_ENGINE_DEFAULTS").contains("off")) b
-    else engineDefaults.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  def localSession(extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ extra
+    val spark = confs.foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Parse a tier name (the `SPARK_GRAFT_TIER` env convention). */
   def tier(name: String): Tier = name.trim.toLowerCase match {

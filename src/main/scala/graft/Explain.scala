@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Plan-inspection utility: prints the formatted physical plan for the
   * named queries (or a summary line for all) so shuffle/broadcast/pushdown
@@ -116,14 +116,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Conf.localSession()
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         try {

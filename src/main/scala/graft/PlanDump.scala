@@ -3,23 +3,16 @@ package graft
 /** Writes `.explain("formatted")` for named queries to files — the
   * committed plan evidence for optimization rounds:
   * `runMain graft.PlanDump <sfDir> <outDir> <label> <query> [query...]`
-  * produces `<outDir>/<query>_<label>.txt`. Same session shape as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus) so the dumped
-  * plan is the plan the bench actually runs.
+  * produces `<outDir>/<query>_<label>.txt`. Runs on Bench's session
+  * ([[Conf.localSession]]) so the dumped plan is the plan the bench
+  * actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: PlanDump <sfDir> <outDir> <label> <query> [query...]")
     val Array(sfDir, outDir, label) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Conf.withEngineDefaults(org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Conf.localSession()
     new java.io.File(outDir).mkdirs()
     // GRAFT_PLAN_EXEC=1: collect() the query first so the dumped plan is
     // the POST-EXECUTION adaptive plan (isFinalPlan=true, AQEShuffleRead

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Single-query profile with executor-task attribution:
   * `runMain graft.ProfQuery <sfDir> <query> [query...]` runs each named
@@ -16,27 +15,21 @@ object ProfQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfQuery <sfDir> <query> [query...]")
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_PARTS decouples shuffle partitions from cores: the
     // scale-exponent methodology holds rows-per-task constant the way a
     // real cluster does (partitions ∝ data), isolating per-row cost
     // from the n·log(n/P) per-partition sort factor
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
+    val parts = sys.env.get("SPARK_GRAFT_PARTS")
+      .map("spark.sql.shuffle.partitions" -> _)
     // SPARK_GRAFT_TIER=corpus applies the measured deployment profile
     // (graft.Conf); SPARK_GRAFT_CONFS="k=v;k=v" layers arbitrary extra
     // confs for A/B experiments on top (explicit confs win).
     val tierConfs = sys.env.get("SPARK_GRAFT_TIER")
       .map(t => Conf.profile(Conf.tier(t))).getOrElse(Map.empty)
-    val extra = (tierConfs ++ sys.env.get("SPARK_GRAFT_CONFS").toSeq
+    val adHoc = sys.env.get("SPARK_GRAFT_CONFS").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }).toSeq
-    val spark = extra.foldLeft(Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
+    val spark = Conf.localSession(parts.toSeq ++ tierConfs ++ adHoc: _*)
     val taskMs = new AtomicLong
     val gcMs = new AtomicLong
     val shB = new AtomicLong

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-query profile: `runMain graft.ProfStream <sfDir> <query>...`
@@ -14,14 +13,7 @@ object ProfStream {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfStream <sfDir> <query> [query...]")
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Conf.localSession()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit =
@@ -43,68 +35,14 @@ object ProfStream {
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     })
     args.drop(1).foreach { name =>
-      if (name == "tws_compare") twsCompare(spark, sfDir)
-      else {
-        val fn = SparkEntry.queries.getOrElse(name,
-          sys.error(s"unknown query: $name"))
-        Seq("cold", "warm").foreach { label =>
-          val w0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          println(f"PROFS $name $label total=${(System.nanoTime() - w0) / 1e9}%.3fs")
-        }
+      val fn = SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query: $name"))
+      Seq("cold", "warm").foreach { label =>
+        val w0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        println(f"PROFS $name $label total=${(System.nanoTime() - w0) / 1e9}%.3fs")
       }
     }
     spark.stop()
-  }
-
-  /** A/B the two arbitrary-state sessionizers — flatMapGroupsWithState
-    * vs transformWithState — as REAL streaming queries under identical
-    * conditions: same RocksDB provider (tws requires it; fmgws runs on
-    * it too, so the store is held constant), same state-partition
-    * count, same event feed split into micro-batches so state volume
-    * accumulates across triggers. The listener above prints each
-    * batch's duration breakdown; the summary line carries total wall
-    * per variant. `runMain graft.ProfStream <sfDir> tws_compare`.
-    */
-  private def twsCompare(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    import graft.streaming.Sessionize
-    val evs = Tables.load(spark, sfDir, "events")
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("tsMicros"))
-      .as[Sessionize.Ev].collect()
-      .sortBy(e => (e.tsMicros, e.event_id))
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_TWS_BATCHES", "8").toInt
-    val chunks = evs.grouped(math.max(1, evs.length / nBatches)).toSeq
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        ("org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"),
-      "spark.sql.shuffle.partitions" -> Sessionize.statePartitions.toString)
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try Seq("fmgws", "tws").foreach { variant =>
-      // two passes: pass 1 warms RocksDB/codegen, pass 2 is the signal
-      Seq("cold", "warm").foreach { label =>
-        implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[Sessionize.Ev]
-        val ds =
-          if (variant == "fmgws") Sessionize.sessionizeStream(input.toDS())
-          else Sessionize.sessionizeStreamTws(input.toDS())
-        val w0 = System.nanoTime()
-        val q = ds.writeStream.outputMode("append")
-          .format("noop").queryName(s"tws_compare_$variant").start()
-        try chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-        finally q.stop()
-        println(f"PROFS tws_compare $variant $label " +
-          f"batches=${chunks.size} events=${evs.length} " +
-          f"total=${(System.nanoTime() - w0) / 1e9}%.3fs")
-      }
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

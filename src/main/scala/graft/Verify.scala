@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +11,18 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same engine partitioning defaults as Bench (Conf.engineDefaults):
-    // the correctness gate must run the exact engine config the bench
-    // measures.
-    val spark = Conf.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The correctness gate runs on Bench's session, so it checks the
+    // exact engine configuration the bench measures.
+    val spark = Conf.localSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
+    val selected = SparkEntry.queries.filter(q => keep(q._1))
+    val failed = Seq.newBuilder[String]
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
         // A reused outDir may hold this query's dump from an earlier run —
         // delete it, or the downstream compare would pass on stale data.
         val stale = Paths.get(s"$outDir/$name")
@@ -56,6 +50,10 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(o => keep(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // One closing summary, so failures need not be fished out of the log.
+    val names = failed.result()
+    System.err.println(s"[verify] failed ${names.size}/${selected.size}: " +
+      names.mkString("[", ", ", "]"))
     spark.stop()
   }
 }

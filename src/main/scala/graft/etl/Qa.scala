@@ -25,13 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Qa {
 
-  private val prof = sys.env.contains("GRAFT_QA_PROF")
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    if (prof) println(f"QAPROF $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-    r
-  }
-
   /** The report is EAGER (fused scalars collected and assembled locally),
     * so memoize per (session, dir): a caller that merely registers the
     * qa_report view must not re-run the 18 reconciliation jobs.
@@ -73,8 +66,8 @@ object Qa {
     // them; concurrent first-materialization would duplicate the work),
     // then run the per-table scalar jobs concurrently — Spark's scheduler
     // interleaves small jobs, so wall time ≈ the slowest scalar, not the sum.
-    val factStageCnt = timed("stageFactCount")(stage("fact").count())
-    val factDwhCnt = timed("dwhFactCount")(fact.count())
+    val factStageCnt = stage("fact").count()
+    val factDwhCnt = fact.count()
 
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -83,7 +76,7 @@ object Qa {
     import scala.concurrent.duration.Duration
 
     val statsF = dimSpecs.map { case (t, key) =>
-      Future(t -> timed(s"dimStats($t)")(dimStats(stage(t), key)))
+      Future(t -> dimStats(stage(t), key))
     }
 
     // Fact fused pass: COUNT(*) + the 5 orphan counts (J7 anti-join
@@ -111,9 +104,9 @@ object Qa {
       orphanSpecs.zipWithIndex.map { case ((_, key, _, _), i) =>
         sum(when(col(key).isNotNull && col(s"_f$i").isNull, 1L).otherwise(0L))
       }: _*)
-    val factRowF = Future(timed("factFused")(factRow.head))
-    val aggSumF = Future(timed("aggSum")(Dwh.aggPerAdmission(fact)
-      .agg(sum(col("total_events"))).head.getLong(0)))
+    val factRowF = Future(factRow.head)
+    val aggSumF = Future(Dwh.aggPerAdmission(fact)
+      .agg(sum(col("total_events"))).head.getLong(0))
 
     val (stats, factRow2, aggSum) =
       try {

@@ -1363,36 +1363,20 @@ object DedupOps extends OpGroup {
   // slice) with RE-CRAWLED copies of corpus docs (identical text under
   // fresh batch ids) — the re-fetch case every incremental crawl hits —
   // so both dup branches fire non-vacuously; the oracle constructs the
-  // identical batch.
+  // identical batch. ARCHITECTURE's fixed-batch scale row was measured
+  // with a source-id-capped variant of this op (see git history).
   // ---------------------------------------------------------------------
   val incrBatchMod = 10
   val recrawlMod = 7
   val recrawlIdOffset = 2000000L
 
-  def incrementalDedup(s: SparkSession, dir: String): DataFrame =
-    incrementalDedupAt(s, dir, Long.MaxValue)
-
-  /** Fixed-batch control for the scale stress (ARCHITECTURE's
-    * dedup_incremental fixed-batch row): `bound` caps the simulated
-    * arrival to source ids below it, so on a gen_scale 10× corpus the
-    * BATCH stays the base-corpus slice (replica ids sit at rep·n + id)
-    * while the probed index scales with the corpus — the production
-    * question "does per-batch cost track the batch or the corpus"
-    * measured directly. Reached ONLY from the profiling main
-    * (ProfDedup's env knob) — the registered query is the unbounded
-    * form, so no environment state can make the Spark result diverge
-    * from its oracle.
-    */
-  private[graft] def incrementalDedupAt(s: SparkSession, dir: String,
-      bound: Long): DataFrame = {
+  def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val batch = d.filter(col("doc_id") % incrBatchMod === 0
-        && col("doc_id") < bound)
+    val batch = d.filter(col("doc_id") % incrBatchMod === 0)
       .select(col("doc_id").as("batch_id"), col("doc_id").as("src_id"))
       .unionByName(
         d.filter(col("doc_id") % recrawlMod === 1
-            && col("doc_id") % incrBatchMod =!= 0
-            && col("doc_id") < bound)
+            && col("doc_id") % incrBatchMod =!= 0)
           .select((col("doc_id") + recrawlIdOffset).as("batch_id"),
             col("doc_id").as("src_id")))
     val fp = d.select(col("doc_id"), fingerprint(col("text")).as("fp"))

@@ -32,8 +32,7 @@ object Memo {
     * + the target). A bound near one generation's entry count would
     * evict HOT artifacts mid-run and silently recompute them.
     */
-  private val MaxEntries =
-    sys.env.getOrElse("SPARK_GRAFT_MEMO_MAX", "192").toInt
+  private val MaxEntries = 192
   private val order = new java.util.ArrayDeque[String]()
 
   private def recordInsert(key: String): Unit = {

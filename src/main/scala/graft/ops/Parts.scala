@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Why this exists: a `.cache()`/`localCheckpoint()` freezes its frame's
   * partition count — AQE does not re-plan inside cached plans (by
   * default, and the global escape was measured and rejected; see
-  * [[graft.Conf.engineDefaults]]) — so an artifact built under the
+  * OPTIMIZATION_r14.md) — so an artifact built under the
   * session's shuffle partitioning keeps that many partitions no matter
   * how small it is, and EVERY downstream stage that re-scans it launches
   * that many tasks. At bench scale the per-task fixed cost (scheduling,

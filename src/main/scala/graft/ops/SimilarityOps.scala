@@ -1395,8 +1395,9 @@ object SimilarityOps extends OpGroup {
     * DEGREE order ([[triangleCountDeg]]) is the default for any graph
     * without a per-node degree cap — on a skewed 1M-node graph id-order
     * emits 2.50e9 wedge rows / 1244 s vs degree-order 3.8e6 / 15.0 s
-    * (659×), equal counts (ProfTri). Id-order survives here as the
-    * capped-graph CONTROL: on the kNN graph (degree ≤ k by
+    * (659×), equal counts (a synthetic hub-and-ring graph; the profiling
+    * main that measured it is in git history). Id-order survives here as
+    * the capped-graph CONTROL: on the kNN graph (degree ≤ k by
     * construction) it skips the two degree joins and wedge fan-out is
     * already k-bounded, so it is the cheaper plan exactly when the cap
     * exists.

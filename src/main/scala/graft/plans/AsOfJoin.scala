@@ -166,7 +166,7 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` — the
+/** `SparkSession.Builder.withExtensions(new GraftExtensions)` — the
   * injection path for sessions the library owns. Installs the as-of
   * planner strategy and the custom expressions as SQL functions
   * ([[GraftFunctions]]), so the full surface is available from session

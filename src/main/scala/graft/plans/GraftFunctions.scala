@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.IntegerType
   * }}}
   *
   * Two injection paths, same descriptions:
-  *  - [[GraftExtensions]] (`SparkSession.builder().withExtensions`) for
+  *  - [[GraftExtensions]] (`SparkSession.Builder.withExtensions`) for
   *    sessions the library owns;
   *  - [[GraftFunctions.register]] for pre-built sessions (the driver's),
   *    via the registry the analyzer resolves against.

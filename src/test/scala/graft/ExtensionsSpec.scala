@@ -3630,10 +3630,14 @@ class ExtensionsSpec extends AnyFunSuite {
     // plan would mean cell-count scaling changes the execution
     // strategy, which is the failure mode the r10 clustered-twin
     // measurement warned about (N²/cells blowup when k can't move).
-    val base = Explain.counters(
-      SparkEntry.queries("sim_ivf_topk")(spark, dir))
-    val twin = Explain.counters(
-      SparkEntry.queries("sim_ivf_topk_s16")(spark, dir))
+    // Both memoized cell tables are built first: a materialized cache
+    // plans with its real (single) partition, which drops the probe's
+    // exchanges, so an unbuilt twin next to a built base would make the
+    // comparison depend on which suites ran before this one.
+    val names = Seq("sim_ivf_topk", "sim_ivf_topk_s16")
+    names.foreach(n => SparkEntry.queries(n)(spark, dir).count())
+    val Seq(base, twin) =
+      names.map(n => Explain.counters(SparkEntry.queries(n)(spark, dir)))
     info(s"base: $base\ntwin: $twin")
     for (k <- Seq("shufflesTree", "sortMergeJoins", "nestedLoopJoins",
         "broadcasts"))

@@ -264,18 +264,13 @@ class GraftSpec extends AnyFunSuite {
     } finally cached.unpersist()
   }
 
-  test("cache-retention sweep: every persist/cache site is classified") {
-    // Memo's bounded retention releases only frames it OWNS (the
-    // top-level DataFrame of a Memo.of builder); a bare `.persist()` /
-    // `.cache()` anywhere else lives until clearCache — the r8
-    // AnalyticsOps leak pattern. This sweep pins the exact per-file
-    // site count against the classification below, so a NEW site fails
-    // until it is either routed through Memo, released by its builder
-    // (try/finally), or classified here with its release story — the
-    // window audit's discipline applied to executor storage.
+  /** Per-file count of CALL SITES matching `pat` under
+    * src/main/scala/graft (files with none omitted), for the source
+    * sweeps below.
+    */
+  private def codeSites(pat: java.util.regex.Pattern): Map[String, Int] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val pat = java.util.regex.Pattern.compile("\\.persist\\(|\\.cache\\(\\)")
     // Count CALL SITES, not raw text hits: comments are stripped first
     // (a doc-comment mentioning `.cache()` is prose, and counting it
     // made an innocuous comment edit fail this sweep with a misleading
@@ -326,19 +321,31 @@ class GraftSpec extends AnyFunSuite {
       }
       out.toString
     }
-    val found = scala.util.Using.resource(java.nio.file.Files.walk(root)) {
-      walk =>
-        walk.iterator().asScala
-          .filter(_.toString.endsWith(".scala"))
-          .map { p =>
-            val txt = stripComments(
-              new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-            val m = pat.matcher(txt)
-            var n = 0
-            while (m.find()) n += 1
-            root.relativize(p).toString.replace('\\', '/') -> n
-          }.filter(_._2 > 0).toMap
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { walk =>
+      walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map { p =>
+          val txt = stripComments(
+            new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+          val m = pat.matcher(txt)
+          var n = 0
+          while (m.find()) n += 1
+          root.relativize(p).toString.replace('\\', '/') -> n
+        }.filter(_._2 > 0).toMap
     }
+  }
+
+  test("cache-retention sweep: every persist/cache site is classified") {
+    // Memo's bounded retention releases only frames it OWNS (the
+    // top-level DataFrame of a Memo.of builder); a bare `.persist()` /
+    // `.cache()` anywhere else lives until clearCache — the r8
+    // AnalyticsOps leak pattern. This sweep pins the exact per-file
+    // site count against the classification below, so a NEW site fails
+    // until it is either routed through Memo, released by its builder
+    // (try/finally), or classified here with its release story — the
+    // window audit's discipline applied to executor storage.
+    val found = codeSites(
+      java.util.regex.Pattern.compile("\\.persist\\(|\\.cache\\(\\)"))
     val classified: Map[String, (Int, String)] = Map(
       "ops/SimilarityOps.scala" -> ((14,
         "13 Memo-owned top frames (ivfCells input+probe table, mipsAug, " +
@@ -355,9 +362,6 @@ class GraftSpec extends AnyFunSuite {
         "Memo-owned: shingleRows, bandTable, cappedBands, shingles, " +
           "cappedShingleRows, cappedShingleSets, clusters, " +
           "contamShingleRows")),
-      "ProfTri.scala" -> ((1,
-        "profiling-main-only synthetic edge list, unpersisted in-run " +
-          "and released with the main's session")),
       "ops/AnalyticsOps.scala" -> ((2,
         "Memo-owned: attributionJoined, attributionPer (the r8 leak, " +
           "fixed by routing through Memo)")),
@@ -391,6 +395,16 @@ class GraftSpec extends AnyFunSuite {
         "Memo.of (bounded retention), release intermediates in the " +
         "builder, or classify here with the release story:\n  " +
         diffs.mkString("\n  "))
+  }
+
+  test("one session builder: only Conf.scala calls SparkSession.builder") {
+    // Every main runs on Conf.localSession, so the CPU default, shuffle
+    // partitions, time zone and log level cannot drift between the
+    // bench, the correctness dump and the plan/profile tools again.
+    val found = codeSites(
+      java.util.regex.Pattern.compile("SparkSession\\s*\\.\\s*builder\\b"))
+    assert(found == Map("Conf.scala" -> 1),
+      s"SparkSession.builder call sites outside Conf.localSession: $found")
   }
 
   test("every query has an oracle or documented omission") {
