@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 object Bench {
   /** Full-plan sink: the noop v2 sink consumes every output column of
@@ -64,6 +65,15 @@ object Bench {
         override def onQueryTerminated(e: org.apache.spark.sql.streaming
             .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       })
+    // Warm-up and layer-build failures: printed when they happen and
+    // listed in BENCH_FULL.json, so a broken build is visible instead of
+    // landing its cost or exception on whichever query touches it first.
+    val buildFailed =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def fail(phase: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $phase FAILED: ${e.getMessage}")
+      buildFailed.add(phase -> String.valueOf(e.getMessage))
+    }
     // JIT/codegen/parquet-reader warm-up so measured queries aren't charged
     // for one-time JVM startup costs: run every query once at the smallest
     // scale factor (sf0.001) to compile each plan's codegen paths, then
@@ -74,11 +84,11 @@ object Bench {
       run(SparkEntry.entry(spark))
       val warmDir = "/root/testdata/sf0.001"
       if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-        SparkEntry.queries.foreach { case (_, fn) =>
+        SparkEntry.queries.foreach { case (name, fn) =>
           try run(fn(spark, warmDir))
-          catch { case _: Throwable => }
+          catch { case NonFatal(e) => fail(s"warmup $name", e) }
         }
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) => fail("warmup", e) }
     // The stage/DWH layers, the QA report, the bucketed join tables, the
     // ANN indexes, and every first-touch physical layout (partitioned /
     // z-order / compacted / sketch tables / corrupt feed / time-travel
@@ -91,10 +101,12 @@ object Bench {
     val tLayer = System.nanoTime()
     // per-component build seconds on stderr (diagnostic only — the JSON
     // stdout line must stay compact); concurrent components report their
-    // own span, so spans overlap and don't sum to the phase wall time
-    def timed[T](what: String)(body: => T): T = {
+    // own span, so spans overlap and don't sum to the phase wall time. A
+    // failed component is recorded and the phase goes on without it.
+    def timed(what: String)(body: => Any): Unit = {
       val t0 = System.nanoTime()
-      try body
+      try { body; () }
+      catch { case NonFatal(e) => fail(s"build $what", e) }
       finally System.err.println(
         f"[bench] build $what: ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
@@ -206,7 +218,7 @@ object Bench {
             graft.ops.Joins.entityResolve(spark, sfDir).count())))),
           Duration.Inf)
       } finally pool.shutdown()
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) => fail("layer_build", e) }
     val layerSec = (System.nanoTime() - tLayer) / 1e9
     // Storage telemetry (stderr diagnostic, like the build timings): the
     // checkpoint-lifetime discipline (ops.Scratch) claims block-manager
@@ -303,8 +315,8 @@ object Bench {
       case (n, (_, _, _, _, t)) if n.startsWith("stream_") => t
     }.sum
     def fmt(v: Double): String = f"$v%.3f"
-    def line(qs: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$fj,"layer_build":${fmt(layerSec)},"stream_subtotal":${fmt(streamSub)},"stream_triggers":$streamTrig,"task_total":${fmt(taskTotal)},"sf":"$sfDir"}"""
+    def line(qs: String, extra: String = ""): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$fj,"layer_build":${fmt(layerSec)},"stream_subtotal":${fmt(streamSub)},"stream_triggers":$streamTrig,"task_total":${fmt(taskTotal)},"sf":"$sfDir"$extra}"""
     // The harness that invokes this main captures only the LAST ~2000
     // characters of output and parses the JSON line out of that window, so
     // the line printed to stdout must stay well under 2000 bytes end to
@@ -340,10 +352,20 @@ object Bench {
         ",\"task_sec\":" + fmt(task) + ",\"shuffle_mb\":" + fmt(sh) +
         (if (trigN > 0) ",\"triggers\":" + trigN else "") + "}"
     }.mkString("{", ",", "}")
+    import scala.jdk.CollectionConverters._
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val failedBuilds = buildFailed.asScala.map { case (phase, msg) =>
+      s"""{"phase":${json.writeValueAsString(phase)},""" +
+        s""""error":${json.writeValueAsString(msg)}}"""
+    }.mkString("[", ",", "]")
     try {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
-      try w.println(line(fullQs)) finally w.close()
-    } catch { case _: Throwable => }
+      try w.println(line(fullQs, ",\"build_failed\":" + failedBuilds))
+      finally w.close()
+    } catch {
+      case NonFatal(e) => System.err.println(
+        s"[bench] BENCH_FULL.json write FAILED: ${e.getMessage}")
+    }
     val budget = 1500 - line("{}").length
     val sb = new StringBuilder
     var restSum = 0.0

@@ -52,11 +52,8 @@ object Tables {
     * same LAZY DataFrame per (session, dir, table): executions still
     * scan the parquet files every time (this caches plan resolution,
     * never data or results), and downstream plans share one canonical
-    * relation. Routed through [[graft.ops.Memo]] so the retention is
-    * BOUNDED: a long-lived service cycling sessions or scale-factor dirs
-    * evicts the oldest entries (dropping their pinned SessionState and
-    * file listings) instead of accumulating them for the JVM's lifetime,
-    * and the same staleness contract applies in one place.
+    * relation. Kept in [[graft.ops.Memo]], under its retention and
+    * staleness contract.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.ops.Memo.of(spark, dir, s"srcTable:$name")(

@@ -259,26 +259,12 @@ object DedupOps extends OpGroup {
     qualityReportAt(125L)(s, dir)
 
   /** Corpus doc count for the budget→modulus derivation — one bounded
-    * driver scalar per (session, dir), the IVF-centroid discipline;
-    * cached so re-CONSTRUCTING the report plan (Verify runs two
-    * budgets; specs explain it repeatedly) doesn't re-run the job.
-    *
-    * Staleness contract: same as [[Memo]] — a (session, dir) pair is
-    * assumed to read ONE testdata generation; regenerating the dir
-    * under a live session is not a supported flow anywhere in the repo
-    * (Memo-cached layer frames would be equally stale, and the feed
-    * snapshots rebuild via their own mtime stamp). Unlike Memo this
-    * caches a literal baked into the RESULT (the sample modulus), so if
-    * in-session regeneration ever becomes supported, invalidate this
-    * map wherever Memo's invalidation lands.
+    * driver scalar, the IVF-centroid discipline; memoized so
+    * re-CONSTRUCTING the report plan (Verify runs two budgets; specs
+    * explain it repeatedly) doesn't re-run the job.
     */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent(
-      s"${System.identityHashCode(s)}|$dir",
-      _ => java.lang.Long.valueOf(docs(s, dir).count())).longValue()
+  private[graft] def docCount(s: SparkSession, dir: String): Long =
+    Memo.of(s, dir, "dedupDocCount")(docs(s, dir).count())
 
   private def qualityReportAt(budget: Long)(
       s: SparkSession, dir: String): DataFrame = {

@@ -393,8 +393,9 @@ object Joins extends OpGroup {
   // queries' plans. At production scale the default thresholds (10 GB
   // scan) trigger by themselves; zeroing is harness-scale-only.
   // ---------------------------------------------------------------------
-  def runtimeBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val bs = bloomSessions.computeIfAbsent(s, s => {
+  /** The bloom clone of `s`: one per session, not per dir (no dir key). */
+  private[graft] def bloomSession(s: SparkSession): SparkSession =
+    Memo.of(s, "", "runtimeBloomSession") {
       import org.apache.spark.sql.internal.SQLConf
       val n = s.newSession()
       n.conf.set(SQLConf.RUNTIME_BLOOM_FILTER_ENABLED.key, "true")
@@ -408,7 +409,10 @@ object Joins extends OpGroup {
       n.conf.set("spark.sql.shuffle.partitions",
         s.conf.get("spark.sql.shuffle.partitions"))
       n
-    })
+    }
+
+  def runtimeBloomJoin(s: SparkSession, dir: String): DataFrame = {
+    val bs = bloomSession(s)
     val urgent = Tables.load(bs, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
@@ -421,9 +425,6 @@ object Joins extends OpGroup {
         sum(col("l_quantity").cast(DecimalType(18, 2)))
           .cast(DoubleType).as("sum_qty"))
   }
-
-  private val bloomSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
 
   private val runtimeBloomJoinSql =
     """SELECT COUNT(*) AS n_items,

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -70,55 +68,49 @@ object PqOps extends OpGroup {
 
   /** Trained codebook per subspace: seeds = subvectors of vec_id 0..15,
     * one Lloyd round (assign all, recompute means). Every seed assigns
-    * at least itself (d² = 0), so no cell is ever empty. Memoized per
-    * (session, dir) alongside the codes frame.
+    * at least itself (d² = 0), so no cell is ever empty. Memoized
+    * alongside the codes frame.
     */
-  private val cbStore =
-    new ConcurrentHashMap[String, Seq[Seq[(Int, Array[Double])]]]()
-
-  private def codebook(s: SparkSession,
-      dir: String): Seq[Seq[(Int, Array[Double])]] = {
-    val key = s"${System.identityHashCode(s)}|$dir"
-    val hit = cbStore.get(key)
-    if (hit != null) return hit
-    val seedRows = emb(s, dir).filter(col("vec_id") < pqK)
-      .select(col("vec_id"), col("embedding")).collect()
-    val cb0: Seq[Seq[(Int, Array[Double])]] = (0 until pqM).map { j =>
-      seedRows.map { r =>
-        val e = r.getSeq[Float](1)
-        r.getLong(0).toInt ->
-          Array.tabulate(pqSubDim)(i => e(j * pqSubDim + i).toDouble)
-      }.sortBy(_._1).toSeq
+  private[graft] def codebook(s: SparkSession,
+      dir: String): Seq[Seq[(Int, Array[Double])]] =
+    Memo.of(s, dir, "pqCodebook") {
+      val seedRows = emb(s, dir).filter(col("vec_id") < pqK)
+        .select(col("vec_id"), col("embedding")).collect()
+      val cb0: Seq[Seq[(Int, Array[Double])]] = (0 until pqM).map { j =>
+        seedRows.map { r =>
+          val e = r.getSeq[Float](1)
+          r.getLong(0).toInt ->
+            Array.tabulate(pqSubDim)(i => e(j * pqSubDim + i).toDouble)
+        }.sortBy(_._1).toSeq
+      }
+      // one Lloyd round: assign with the seed codebook, then per-(j, code,
+      // pos) means over micro-quantized BIGINTs (exact integer sums —
+      // partition-order-free, engine-free)
+      val assigned = (0 until pqM).foldLeft(emb(s, dir)) { (df, j) =>
+        df.withColumn(s"c$j", assignCol(j, cb0(j)))
+      }
+      val meanRows = assigned
+        .select(explode(array((0 until pqM).map(j =>
+          struct(lit(j).as("j"), col(s"c$j").as("code"),
+            subCol(j).as("sv"))): _*)).as("e"))
+        .select(col("e.j").as("j"), col("e.code").as("code"),
+          posexplode(col("e.sv")))
+        .select(col("j"), col("code"), col("pos"),
+          round(col("col").cast("double") * 1000000).cast("long").as("q"))
+        .groupBy(col("j"), col("code"), col("pos"))
+        .agg(round(
+          sum(col("q")).cast("double") / (count(lit(1)) * 1000000.0),
+          6).as("c"))
+        .collect()
+      (0 until pqM).map { j =>
+        meanRows.filter(_.getInt(0) == j).groupBy(_.getInt(1)).map {
+          case (code, rs) =>
+            val arr = new Array[Double](pqSubDim)
+            rs.foreach(r => arr(r.getInt(2)) = r.getDouble(3))
+            code -> arr
+        }.toSeq.sortBy(_._1)
+      }
     }
-    // one Lloyd round: assign with the seed codebook, then per-(j, code,
-    // pos) means over micro-quantized BIGINTs (exact integer sums —
-    // partition-order-free, engine-free)
-    val assigned = (0 until pqM).foldLeft(emb(s, dir)) { (df, j) =>
-      df.withColumn(s"c$j", assignCol(j, cb0(j)))
-    }
-    val meanRows = assigned
-      .select(explode(array((0 until pqM).map(j =>
-        struct(lit(j).as("j"), col(s"c$j").as("code"),
-          subCol(j).as("sv"))): _*)).as("e"))
-      .select(col("e.j").as("j"), col("e.code").as("code"),
-        posexplode(col("e.sv")))
-      .select(col("j"), col("code"), col("pos"),
-        round(col("col").cast("double") * 1000000).cast("long").as("q"))
-      .groupBy(col("j"), col("code"), col("pos"))
-      .agg(round(sum(col("q")).cast("double") / (count(lit(1)) * 1000000.0),
-        6).as("c"))
-      .collect()
-    val cb1: Seq[Seq[(Int, Array[Double])]] = (0 until pqM).map { j =>
-      meanRows.filter(_.getInt(0) == j).groupBy(_.getInt(1)).map {
-        case (code, rs) =>
-          val arr = new Array[Double](pqSubDim)
-          rs.foreach(r => arr(r.getInt(2)) = r.getDouble(3))
-          code -> arr
-      }.toSeq.sortBy(_._1)
-    }
-    cbStore.putIfAbsent(key, cb1)
-    cb1
-  }
 
   /** Codes table: vec_id + one 4-bit code per subspace — the ~32×
     * compressed index the ADC scan reads instead of the embeddings.

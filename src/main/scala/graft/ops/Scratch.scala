@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
 
 /** Lifetime bound for per-invocation `localCheckpoint()` scratch frames.
@@ -41,9 +42,9 @@ object Scratch {
     * RDD-level release ([[org.apache.spark.sql.GraftSqlBridge
     * .releaseCheckpoint]] — `Dataset.unpersist` only sees cache-manager
     * entries); the Dataset-level unpersist runs too in case a cached
-    * frame is ever tracked. Failures (stopped session, already-released
-    * blocks) are ignored — release is best-effort hygiene, never a
-    * correctness gate.
+    * frame is ever tracked. Non-fatal failures (stopped session,
+    * already-released blocks) are ignored — release is best-effort
+    * hygiene, never a correctness gate.
     */
   def drain(): Unit = {
     var df = pending.poll()
@@ -51,7 +52,7 @@ object Scratch {
       try {
         org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(df)
         df.unpersist(blocking = false)
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       df = pending.poll()
     }
   }

@@ -226,16 +226,13 @@ object SimilarityOps extends OpGroup {
     * production the quantizer is trained offline per generation (k×64
     * doubles, bounded by k not the corpus) and arrivals are assigned
     * under it until the next re-cluster; `stream_ivf_maintain` exercises
-    * exactly that. Driver-memoized per (dir, seedBits): the model is
-    * pure deterministic data, so recomputing it per caller would just
-    * repeat the same two corpus passes.
+    * exactly that. Memoized per seedBits: the model is pure
+    * deterministic data, so recomputing it per caller would just repeat
+    * the same two corpus passes.
     */
-  private val modelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Double])]]()
-
   def ivfModel(s: SparkSession, dir: String,
       seedBits: Int = ivfSeedBits): Seq[(Int, Array[Double])] =
-    modelMemo.computeIfAbsent(s"$dir#$seedBits", { _ =>
+    Memo.of(s, dir, s"ivfModel$seedBits") {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"),
         graft.functions.TextFns.l2norm(col("embedding")).as("nrm")).cache()
       try {
@@ -245,7 +242,7 @@ object SimilarityOps extends OpGroup {
         val assign1 = assignCells(e, centroidsOf(seeded))
         centroidsOf(assign1)
       } finally e.unpersist(blocking = false)
-    })
+    }
 
   /** Assign top-[[ivfProbe]] probe cells under a frozen quantizer: one
     * broadcast-literal codegen map over `vecs` (vec_id, embedding), no

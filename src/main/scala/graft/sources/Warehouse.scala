@@ -98,43 +98,26 @@ object Warehouse extends OpGroup {
     s"$whRoot/$tag/$layer"
   }
 
-  private val matStore =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, DataFrame]]()
-  private val matLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val layerBuilds = new java.util.concurrent.atomic.AtomicLong
 
-  /** Materialize a layer ONCE per (session, dir, layer): write it with
-    * [[writeLayer]], read the files back, and memoize the file-backed
-    * map so every later consumer gets parquet scans instead of a plan
-    * re-derivation. `build` is by-name — a memo hit never constructs the
-    * layer. Columns are re-selected into the pre-write order (partitionBy
-    * moves the partition column last on read).
-    *
-    * First-build is serialized under a PER-KEY lock so two racing threads
-    * can't run overlapping writes to the same path (nested layers — DWH
-    * building on stage — take different locks, so reentrancy is safe;
-    * a map-wide computeIfAbsent would not be, see [[graft.ops.Memo]]).
+  /** Materialize a layer ONCE per (session, dir, layer) through
+    * [[graft.ops.Memo]]: write it with [[writeLayer]], read the files
+    * back, and keep the file-backed map so every later consumer gets
+    * parquet scans instead of a plan re-derivation. `build` is by-name —
+    * a memo hit never constructs the layer. Columns are re-selected into
+    * the pre-write order (partitionBy moves the partition column last on
+    * read). Each build writes its own directory, so a second session's
+    * build never deletes the files a first session's layer still reads.
     */
   def materializedLayer(s: SparkSession, dir: String, layer: String)(
-      build: => Map[String, DataFrame]): Map[String, DataFrame] = {
-    val key = s"${System.identityHashCode(s)}|$dir|$layer"
-    val existing = matStore.get(key)
-    if (existing != null) return existing
-    val lock = matLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val won = matStore.get(key)
-      if (won != null) return won
+      build: => Map[String, DataFrame]): Map[String, DataFrame] =
+    graft.ops.Memo.of(s, dir, s"layer:$layer") {
       val m = build
-      val base = layerPath(dir, layer)
+      val base = layerPath(dir, s"${layer}_b${layerBuilds.incrementAndGet()}")
       writeLayer(m, base)
       val back = readLayer(s, base, m.keys.toSeq)
-      val ordered = m.map { case (n, df) =>
-        n -> back(n).select(df.columns.map(col): _*)
-      }
-      matStore.put(key, ordered)
-      ordered
+      m.map { case (n, df) => n -> back(n).select(df.columns.map(col): _*) }
     }
-  }
 
   /** S4 in other interchange formats: CSV (header) and JSON lines.
     * Text formats erase types, so reads take the original schema

@@ -1270,11 +1270,57 @@ class ExtensionsSpec extends AnyFunSuite {
     try {
       val res = Await.result(
         Future.sequence((1 to 8).map(_ => Future(touch()))), Duration.Inf)
-      // racing first touches must serialize into ONE build + write; every
-      // caller gets the same file-backed layer
+      // racing first touches of one Memo key must serialize into ONE
+      // build + write; every caller gets the same file-backed layer
       assert(built.get() == 1, s"layer built ${built.get()} times")
       assert(res.forall(_("t").count() == 2))
     } finally pool.shutdown()
+  }
+
+  test("a second session's layer build leaves the first session's files") {
+    val first = graft.etl.Stage.materialized(spark, dir)
+    val second = graft.etl.Stage.materialized(spark.newSession(), dir)
+    assert(!(first eq second))
+    // both file-backed layers stay readable: the second build wrote its
+    // own directory instead of overwriting the first one's files
+    assert(first("fact").count() == second("fact").count())
+  }
+
+  test("two sessions on one dir never share a memoized artifact") {
+    import graft.ops.{DedupOps, Joins, Memo, PqOps, SimilarityOps}
+    val other = spark.newSession()
+    def same[T <: AnyRef](get: SparkSession => T): Boolean =
+      get(spark) eq get(spark)
+    def shared[T <: AnyRef](get: SparkSession => T): Boolean =
+      get(spark) eq get(other)
+    assert(same(SimilarityOps.ivfModel(_, dir)))
+    assert(!shared(SimilarityOps.ivfModel(_, dir)))
+    assert(same(PqOps.codebook(_, dir)))
+    assert(!shared(PqOps.codebook(_, dir)))
+    assert(same(Joins.bloomSession))
+    assert(!shared(Joins.bloomSession))
+    // a Long has no identity: probe docCount's memo entry instead — the
+    // building session holds it, a second session on the dir does not
+    val n = DedupOps.docCount(spark, dir)
+    assert(Memo.of[Long](spark, dir, "dedupDocCount")(-1L) == n)
+    assert(Memo.of[Long](other, dir, "dedupDocCount")(-1L) == -1L)
+  }
+
+  test("Memo retention stays bounded across many sessions") {
+    val tag = s"retentionProbe_${System.nanoTime()}"
+    (1 to 300).foreach(i =>
+      graft.ops.Memo.of(spark.newSession(), dir, tag)(i))
+    assert(graft.ops.Memo.size <= 192, s"${graft.ops.Memo.size} live entries")
+  }
+
+  test("Memo retries a build that threw") {
+    val tag = s"throwingProbe_${System.nanoTime()}"
+    intercept[IllegalStateException] {
+      graft.ops.Memo.of[Int](spark, dir, tag)(
+        throw new IllegalStateException("boom"))
+    }
+    assert(graft.ops.Memo.of(spark, dir, tag)(7) == 7)
+    assert(graft.ops.Memo.of(spark, dir, tag)(8) == 7)
   }
 
   test("connected components collapse duplicate chains transitively") {

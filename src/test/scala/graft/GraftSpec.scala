@@ -407,6 +407,20 @@ class GraftSpec extends AnyFunSuite {
       s"SparkSession.builder call sites outside Conf.localSession: $found")
   }
 
+  test("one artifact store: only Memo.scala creates a ConcurrentHashMap") {
+    // Per-session artifacts live in ops.Memo (session-scoped keys, one
+    // build per key, bounded retention); a hand-rolled map elsewhere
+    // would bring back an unbounded or cross-session cache. The mains
+    // are exempt: ProfQuery keys its stage metrics by stage id.
+    val mains = Set("Bench.scala", "Verify.scala", "Explain.scala",
+      "PlanDump.scala", "ProfQuery.scala", "ProfStream.scala")
+    val found = codeSites(java.util.regex.Pattern.compile(
+      "new\\s+(java\\.util\\.concurrent\\.)?ConcurrentHashMap\\b"))
+      .filter { case (f, _) => !mains(f) }
+    assert(found == Map("ops/Memo.scala" -> 1),
+      s"ConcurrentHashMap sites outside ops.Memo: $found")
+  }
+
   test("every query has an oracle or documented omission") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // Non-SQL-expressible ops are allowed to omit; list them explicitly.
