@@ -170,6 +170,10 @@ object Bench {
           // PQ codebook + codes: the other one-time ANN index build
           Future(timed("pq_codes")(
             graft.ops.PqOps.pqCodes(spark, sfDir).count())),
+          // the corpus term index (tf, df, doc lengths): the lexical ops'
+          // shared token table, tokenized once instead of per query
+          Future(timed("term_index")(
+            graft.ops.TextOps.buildTermIndex(spark, sfDir))),
           // kNN graph: N·k edge index probed by pagerank / label
           // propagation / the kNN-join query (built over the IVF cells —
           // ivfCells memo handles the dependency internally); then the

@@ -345,9 +345,6 @@ object Stage {
       "fact" -> fact)
   }
 
-  /** Absolute materialization root for a scale-factor dir (never a
-    * cwd-relative path — portability).
-    */
   /** Stage layer MATERIALIZED at the stage→DWH boundary — the reference's
     * own layered architecture (every Stage_area.sql statement lands in a
     * MariaDB table before DWH.sql reads it; README.md:42-57). Everything

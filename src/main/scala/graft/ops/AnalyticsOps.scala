@@ -333,7 +333,7 @@ object AnalyticsOps extends OpGroup {
     // physically re-executes ~4× (the "ONE user-keyed join" claim above
     // would be a plan-shape claim, not an execution fact). Both frames
     // are horizon-bounded (purchases × 7-day touches). Routed through
-    // Memo (like bpe_words) rather than bare persist(): the cache
+    // Memo (like the term index) rather than bare persist(): the cache
     // manager dedups identical plans within one sfDir, but a JVM
     // touching many sfDirs would accumulate one entry per dir forever —
     // Memo's bounded retention unpersists the oldest beyond its cap.

@@ -17,6 +17,52 @@ object TextOps extends OpGroup {
     Tables.load(s, dir, "documents")
 
   // ---------------------------------------------------------------------
+  // The corpus term index: the whitespace-token table every lexical op
+  // reads instead of re-tokenizing `documents` per call (the split and
+  // explode are the dominant per-row cost of those ops). Three frames,
+  // each its own Memo key so eviction unpersists each one:
+  //  - termFreqs   "termIndex.tf": (doc_id, tok, tf), one row per
+  //                distinct token of a doc; a null text has no rows
+  //  - termStats   "termIndex.df": (tok, df, cf), documents containing
+  //                the token and its corpus count (Σtf)
+  //  - docLengths  "termIndex.dl": (doc_id, dl), one row per document;
+  //                dl = token count (Σtf), NULL for a null text, so the
+  //                frame also counts documents
+  // Consumers stay exact: an occurrence count becomes Σtf and a per-doc
+  // sum of a per-token integer x becomes Σ(tf·x), both integer
+  // arithmetic. Sized by `Parts` from the documents parquet bytes: a tf
+  // row (two longs + the token) is a few times its share of the
+  // compressed text, the vocabulary and the per-doc table are smaller.
+  // ---------------------------------------------------------------------
+  private[graft] def termFreqs(s: SparkSession, dir: String): DataFrame =
+    Memo.of(s, dir, "termIndex.tf") {
+      Parts.sized(docs(s, dir)
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+        .groupBy(col("doc_id"), col("tok"))
+        .agg(count(lit(1)).as("tf")),
+        Parts.sourceBytes(s, dir, "documents") * 4).cache()
+    }
+
+  private[graft] def termStats(s: SparkSession, dir: String): DataFrame =
+    Memo.of(s, dir, "termIndex.df") {
+      Parts.sized(termFreqs(s, dir).groupBy(col("tok"))
+        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf")),
+        Parts.sourceBytes(s, dir, "documents")).cache()
+    }
+
+  private[graft] def docLengths(s: SparkSession, dir: String): DataFrame =
+    Memo.of(s, dir, "termIndex.dl") {
+      Parts.sized(docs(s, dir).select(col("doc_id"),
+        when(col("text").isNotNull,
+          size(tokens(col("text"))).cast("long")).as("dl")),
+        Parts.sourceBytes(s, dir, "documents") / 8).cache()
+    }
+
+  /** Build and materialize the term index (the build phase's entry). */
+  def buildTermIndex(s: SparkSession, dir: String): Unit =
+    Seq(termFreqs _, termStats _, docLengths _).foreach(_(s, dir).count())
+
+  // ---------------------------------------------------------------------
   // Token statistics: whitespace tokens, BPE-ish tokens, char lengths.
   // ---------------------------------------------------------------------
   def tokenStats(s: SparkSession, dir: String): DataFrame = {
@@ -96,10 +142,8 @@ object TextOps extends OpGroup {
   val topTokenK = 50
 
   def topTokens(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
-      .select(explode(tokens(col("text"))).as("token"))
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("n"))
+    termStats(s, dir)
+      .select(col("tok").as("token"), col("cf").as("n"))
       .orderBy(col("n").desc, col("token").asc)
       .limit(topTokenK)
 
@@ -442,20 +486,19 @@ object TextOps extends OpGroup {
   // corpus-wide terms finite. The expression is written with the same
   // association on both engines, so every double op is IEEE-identical.
   //
-  // Plan shape: explode → (doc_id, term) hash-agg (tf) → term hash-agg
-  // (df, reused by the join's partitioning) → doc_id window for the
-  // top-k cut. Corpus size N joins as a broadcast 1-row aggregate, not a
-  // driver-side collect. Heavy terms are exactly the high-df ones, so
-  // the term shuffle has no meaningful skew.
+  // Plan shape: the term index's tf and df tables join on the term, then
+  // a doc_id window takes the top-k cut. Corpus size N (every document,
+  // null texts included) joins as a broadcast 1-row aggregate of the
+  // per-doc table, not a driver-side collect. Heavy terms are exactly
+  // the high-df ones, so the term shuffle has no meaningful skew.
   // ---------------------------------------------------------------------
   val tfidfTopK = 3
 
   def tfidfTopTerms(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val tf = d.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val n = d.agg(count(lit(1)).as("n"))
+    val tf = termFreqs(s, dir).withColumnRenamed("tok", "term")
+    val df = termStats(s, dir).select(col("tok").as("term"), col("df"))
+    // n counts documents, null texts included: docLengths has one row each
+    val n = docLengths(s, dir).agg(count(lit(1)).as("n"))
     val w = tf.join(df, "term").crossJoin(broadcast(n))
       .withColumn("weight",
         col("tf") * (col("n") + lit(1.0)) / (col("df") + lit(1.0)))
@@ -593,10 +636,9 @@ object TextOps extends OpGroup {
   // document by the average log-probability of its tokens under the
   // corpus's own unigram distribution (low = out-of-distribution junk).
   //
-  // Scale design: one explode + hash-agg builds the vocabulary (map-side
-  // combine: the shuffle carries one row per distinct token per mapper),
-  // then tokens join the per-token log-prob and re-aggregate by doc_id —
-  // two shuffles total, both partial-agg'd. No broadcast hint on the
+  // Scale design: the term index's vocabulary (cf per token) gives the
+  // log-probs; the tf table joins them and re-aggregates by doc_id, a
+  // token's occurrences weighted by tf. No broadcast hint on the
   // vocab join: AQE picks broadcast while the vocab fits and falls back
   // to shuffle join when it doesn't (a 100 TB corpus vocabulary can be
   // billions of tokens — never assume it is driver-sized).
@@ -606,22 +648,23 @@ object TextOps extends OpGroup {
   // per-doc sums are exact integer arithmetic in any engine and any
   // partition order; only the final display division is floating point.
   // ---------------------------------------------------------------------
-  def lmScore(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-    val total = freq.agg(sum("c").as("n"))
-    val lp = freq.crossJoin(broadcast(total))
-      .select(col("tok"),
-        floor(log(col("c").cast("double") / col("n")) * lit(1e6))
-          .cast("long").as("lp_micro"))
-    toks.join(lp, "tok")
+  def lmScore(s: SparkSession, dir: String): DataFrame =
+    termFreqs(s, dir).join(unigramLogProbs(s, dir), "tok")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("int").as("n_tokens"),
-        sum("lp_micro").as("lp_sum"))
+      .agg(sum("tf").cast("int").as("n_tokens"),
+        sum(col("tf") * col("lp_micro")).as("lp_sum"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("lp_sum").cast("double") / lit(1e6) / col("n_tokens"), 4)
           .as("avg_logprob"))
+
+  /** (tok, lp_micro): floor(ln(cf / Σcf) · 10⁶) per distinct token. */
+  private def unigramLogProbs(s: SparkSession, dir: String): DataFrame = {
+    val freq = termStats(s, dir).select(col("tok"), col("cf").as("c"))
+    val total = freq.agg(sum("c").as("n"))
+    freq.crossJoin(broadcast(total))
+      .select(col("tok"),
+        floor(log(col("c").cast("double") / col("n")) * lit(1e6))
+          .cast("long").as("lp_micro"))
   }
 
   private val lmScoreSql =
@@ -665,18 +708,10 @@ object TextOps extends OpGroup {
   // doc → lower bucket) agrees across engines.
   // ---------------------------------------------------------------------
   def perplexityBuckets(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-    val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-    val total = freq.agg(sum("c").as("n"))
-    val lp = freq.crossJoin(broadcast(total))
-      .select(col("tok"),
-        floor(log(col("c").cast("double") / col("n")) * lit(1e6))
-          .cast("long").as("lp_micro"))
-    val scored = toks.join(lp, "tok")
+    val scored = termFreqs(s, dir).join(unigramLogProbs(s, dir), "tok")
       .groupBy(col("doc_id"))
-      .agg(floor(sum("lp_micro").cast("double") /
-        (count(lit(1)) * lit(1000.0))).cast("long").as("score_milli"))
+      .agg(floor(sum(col("tf") * col("lp_micro")).cast("double") /
+        (sum("tf") * lit(1000.0))).cast("long").as("score_milli"))
     // localCheckpoint: `byLang` feeds BOTH the cut computation and the
     // final assignment — left lazy, Catalyst plans the whole scoring
     // chain TWICE (two corpus passes, and the audit sees the doubled
@@ -938,10 +973,10 @@ object TextOps extends OpGroup {
   // ---------------------------------------------------------------------
   // Inverted index: token → (df, cf, posting list of doc_id:tf). The
   // search-side artifact of the corpus (retrieval, contamination lookup,
-  // hard-negative mining all probe it). Shape: explode → (token, doc)
-  // hash-agg for tf → token hash-agg collecting postings. Both
-  // aggregations map-side-combine; nothing is globally sorted — the
-  // posting list is sorted WITHIN each token row by `sort_array`.
+  // hard-negative mining all probe it). Shape: the term index's
+  // (doc, token) tf table → token hash-agg collecting postings, map-side
+  // combined; nothing is globally sorted — the posting list is sorted
+  // WITHIN each token row by `sort_array`.
   // Postings are "%06d:tf" strings so lexicographic array order IS
   // doc_id order and the parquet/DuckDB comparison stays scalar-typed.
   // At 100 TB a stopword's posting list exceeds one row's sane size:
@@ -952,10 +987,7 @@ object TextOps extends OpGroup {
   // compact head; the sharded form is the documented scale path.
   // ---------------------------------------------------------------------
   def invertedIndex(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy(col("token"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
+    termFreqs(s, dir).withColumnRenamed("tok", "token")
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
         array_join(sort_array(collect_list(
@@ -1164,8 +1196,8 @@ object TextOps extends OpGroup {
 
   // ---------------------------------------------------------------------
   // BM25 retrieval scoring (Robertson/Sparck Jones): the ranking function
-  // behind Lucene/Elasticsearch, over the same (token, doc) tf table the
-  // inverted index builds. Query = the corpus's top-`bm25QueryTerms`
+  // behind Lucene/Elasticsearch, over the term index's (doc, token) tf,
+  // df and doc-length tables. Query = the corpus's top-`bm25QueryTerms`
   // df tokens (derived IN the plan, so the op is self-contained and
   // identical at every scale factor); score(d) = Σ_t idf(t) ·
   // tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)).
@@ -1184,15 +1216,10 @@ object TextOps extends OpGroup {
   val bm25TopK = 20
 
   def bm25(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-    val tf = toks.groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // doc length re-aggregates the tf table (Σtf per doc ≡ token count):
-    // one corpus explode feeds everything, never two
-    val dl = tf.groupBy(col("doc_id")).agg(sum("tf").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("total"))
+    val tf = termFreqs(s, dir)
+    val df = termStats(s, dir).select(col("tok"), col("df"))
+    val dl = docLengths(s, dir)
+    val stats = bm25Stats(dl)
     val q = df.orderBy(col("df").desc, col("tok").asc).limit(bm25QueryTerms)
     val avgdl = col("total").cast("double") / col("n")
     val idf = log(((col("n") - col("df") + 0.5) / (col("df") + 0.5)) + 1)
@@ -1209,6 +1236,12 @@ object TextOps extends OpGroup {
       .orderBy(col("score_micro").desc, col("doc_id").asc)
       .limit(bm25TopK)
   }
+
+  /** (n, total): documents with at least one token and their token sum
+    * (a null text has a null dl and counts in neither).
+    */
+  private def bm25Stats(dl: DataFrame): DataFrame =
+    dl.agg(count(col("dl")).as("n"), sum("dl").as("total"))
 
   private val bm25Sql =
     s"""WITH toks AS (
@@ -1239,8 +1272,8 @@ object TextOps extends OpGroup {
   // `replace` both engines share, which for one rule IS the exhaustive
   // greedy application ("aaa" + (a,a) → [aa, a]).
   //
-  // Scale design: after the one corpus pass that builds the word-
-  // frequency table, every round runs over the VOCABULARY (distinct
+  // Scale design: word frequencies come from the term index, so every
+  // round runs over the VOCABULARY (distinct
   // words), not the corpus — the cost structure that lets real BPE
   // trainers do 50k merges. Words are "|"-delimited symbol strings
   // ("|a|b|c|"), safe because the corpus is pipe-free (asserted upstream
@@ -1271,19 +1304,12 @@ object TextOps extends OpGroup {
 
   def bpeMerges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Memoized, NOT per-call cache()+unpersist(): the r7 bench showed the
-    // warm rep 2.4× the cold one — the end-of-call async unpersist raced
-    // the next invocation's identical-plan cache() and the replace chain
-    // recomputed the corpus pass per round. The word-frequency table is a
-    // shared artifact of the corpus (one pass, vocabulary-sized); Memo
-    // retention releases it.
-    val words = Memo.of(s, dir, "bpe_words")(docs(s, dir)
-      .select(explode(tokens(col("text"))).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(concat(lit("|"), regexp_replace(col("word"), "(.)", "$1|"))
-        .as("rep"), col("freq"))
-      .cache())
+    // word frequencies are the term index's cf: every round reads the
+    // cached vocabulary, never the corpus
+    val words = termStats(s, dir)
+      .filter(col("tok") =!= "")
+      .select(concat(lit("|"), regexp_replace(col("tok"), "(.)", "$1|"))
+        .as("rep"), col("cf").as("freq"))
     val pairStructs = expr(
       "transform(slice(toks, 1, size(toks)-1), (x, i) -> " +
         "struct(x AS a, toks[i+1] AS b))")
@@ -1367,17 +1393,15 @@ object TextOps extends OpGroup {
 
   private def hardNegativesBuild(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = docs(s, dir)
-    val toks = d.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-    val tf = toks.groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val dl = tf.groupBy(col("doc_id")).agg(sum("tf").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("total"))
-    val qterms = toks.filter(col("doc_id") < hnQueryDocs)
-      .select(col("doc_id").as("q_id"), col("tok")).distinct()
+    val tf = termFreqs(s, dir)
+    val df = termStats(s, dir).select(col("tok"), col("df"))
+    val dl = docLengths(s, dir)
+    val stats = bm25Stats(dl)
+    // tf holds each (doc, token) once: a query's distinct token set
+    val qterms = tf.filter(col("doc_id") < hnQueryDocs)
+      .select(col("doc_id").as("q_id"), col("tok"))
       .join(df, "tok")
-    val fp = d.select(col("doc_id"), fingerprint(col("text")).as("fp"))
+    val fp = docs(s, dir).select(col("doc_id"), fingerprint(col("text")).as("fp"))
     val qfp = fp.filter(col("doc_id") < hnQueryDocs)
       .select(col("doc_id").as("q_id"), col("fp").as("q_fp"))
     val avgdl = col("total").cast("double") / col("n")
@@ -1443,9 +1467,9 @@ object TextOps extends OpGroup {
   // Collocation mining: top bigrams by pointwise mutual information —
   // PMI(a,b) = ln( p(a,b) / (p(a)·p(b)) ) — with a minimum-count floor
   // (PMI's classic failure mode is hapax pairs scoring highest; the
-  // floor is the standard fix). The vocabulary-building explode +
-  // hash-agg shapes are shared with lmScore; bigram extraction is the
-  // same adjacent zip the BPE trainer uses, over doc token arrays.
+  // floor is the standard fix). Unigram counts are the term index's cf,
+  // as in lmScore; bigram extraction is the same adjacent zip the BPE
+  // trainer uses, over doc token arrays.
   // Determinism: the single PMI double is computed with one identical
   // expression tree in both engines and floored to integer micro-units
   // BEFORE the (pmi DESC, pair ASC) cut, so ranking never compares raw
@@ -1461,9 +1485,7 @@ object TextOps extends OpGroup {
         "(x, i) -> struct(x AS a, toks[i+1] AS b))")).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
     val big = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
-    val uni = docs(s, dir)
-      .select(explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
+    val uni = termStats(s, dir).select(col("tok"), col("cf").as("c"))
     val tTot = uni.agg(sum("c").as("t"))
     val bTot = big.agg(sum("c_ab").as("bt"))
     val pmi = floor(log(
@@ -1526,9 +1548,7 @@ object TextOps extends OpGroup {
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
     val bigrams = pairsByDoc.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("c_ab"))
-    val uni = docs(s, dir)
-      .select(explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
+    val uni = termStats(s, dir).select(col("tok"), col("cf").as("c"))
     val vocab = uni.agg(count(lit(1)).as("v"))
     val lp = bigrams
       .join(uni.select(col("tok").as("a"), col("c").as("c_a")), "a")

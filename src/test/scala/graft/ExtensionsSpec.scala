@@ -22,6 +22,18 @@ class ExtensionsSpec extends AnyFunSuite {
 
   val dir = "/root/testdata/sf0.001"
 
+  /** Plan-shape counters of a registered query, taken after one run of
+    * it has built every memoized artifact it reads. A materialized cache
+    * plans differently from an unbuilt one (its real partition count,
+    * its final AQE plan), so a pin that compares these holds in any
+    * suite order.
+    */
+  private def builtCounters(name: String): Map[String, Int] = {
+    SparkEntry.queries(name)(spark, dir).write.format("noop")
+      .mode("overwrite").save()
+    Explain.counters(SparkEntry.queries(name)(spark, dir))
+  }
+
   test("streaming sessionize (flatMapGroupsWithState) matches batch on closed sessions") {
     import spark.implicits._
     val batch = Sessionize.sessionizeBatch(spark, dir)
@@ -932,7 +944,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // long before it is visible over bench noise. Bounds are ≤ the audited
     // plan's counts at sf0.001 (AQE may remove exchanges at runtime, never
     // add static ones).
-    def c(name: String) = Explain.counters(SparkEntry.queries(name)(spark, dir))
+    def c(name: String) = builtCounters(name)
     // DWH pre-aggregation reads the materialized layer: one hash-agg
     // shuffle (plus the distinct-expand's), no join exchanges
     val agg = c("pipe_dwh_agg")
@@ -1067,8 +1079,8 @@ class ExtensionsSpec extends AnyFunSuite {
     val gs = c("text_global_shuffle")
     assert(gs("shuffles") == 1 && gs("broadcasts") == 0,
       s"text_global_shuffle: $gs")
-    // BM25: the query-term and corpus-stats sides broadcast; only the
-    // tf/dl aggregations shuffle
+    // BM25: the query-term and corpus-stats sides broadcast; the tf, df
+    // and doc-length tables are the cached term index
     val bm = c("text_bm25")
     assert(bm("broadcasts") >= 2 && bm("nestedLoopJoins") <= 1,
       s"text_bm25: $bm")
@@ -2411,7 +2423,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("plan shapes: round-4 graph/sampling operators pinned") {
-    def c(name: String) = Explain.counters(SparkEntry.queries(name)(spark, dir))
+    def c(name: String) = builtCounters(name)
     // JL projection is a pure narrow map: no exchange of any kind
     val jl = c("sim_rand_projection")
     info(s"sim_rand_projection: $jl")
@@ -2422,8 +2434,9 @@ class ExtensionsSpec extends AnyFunSuite {
     val knn = c("sim_knn_join")
     info(s"sim_knn_join: $knn")
     // measured: cell-join broadcast + distinct & rank-window exchanges
-    // (2 when the IVF cell memo is warm, 4 when the cell build is inlined
-    // cold — the extra pair is the one-time k-means assignment)
+    // (2 with the IVF cell memo built, as c() leaves it; the ceiling of
+    // 4 is the cold inline cell build's, whose extra pair is the
+    // one-time k-means assignment)
     assert(knn("nestedLoopJoins") == 0 && knn("shuffles") <= 4,
       s"sim_knn_join: $knn")
     // MIPS broadcasts the max-norm scalar and the tiny query set; the
@@ -2448,10 +2461,10 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(lp("nestedLoopJoins") == 0 && lp("shuffles") <= 15,
       s"sim_label_propagation: $lp")
     // containment rides the capped LSH candidate pairs: keyed joins only.
-    // Shuffle count depends on whether the memoized candidate table is
-    // already cached by an earlier test (warm: 4, cold: 7 — the extra
-    // exchanges are the one-time LSH band build); the invariant worth
-    // pinning is "never an all-pairs fallback", plus a cold-build ceiling
+    // c() builds the memoized candidate table first (a cold inline build
+    // added the one-time LSH band exchanges, 7 against 4 warm); the
+    // invariant worth pinning is "never an all-pairs fallback", plus the
+    // cold-build ceiling
     val cont = c("dedup_containment")
     info(s"dedup_containment: $cont")
     assert(cont("nestedLoopJoins") == 0 && cont("shuffles") <= 8,
@@ -2590,7 +2603,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("plan shapes: round-9 additions pinned; margin semantics hold") {
-    def c(name: String) = Explain.counters(SparkEntry.queries(name)(spark, dir))
+    def c(name: String) = builtCounters(name)
     // classifier inference: one codegen map + ONE per-doc agg exchange —
     // token rows never shuffle (map-side partial), no join of any kind.
     // The frame is Memo-persisted (three consumers) so the plan STRING
@@ -2637,7 +2650,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("plan shapes: late round-9 additions pinned") {
-    def c(name: String) = Explain.counters(SparkEntry.queries(name)(spark, dir))
+    def c(name: String) = builtCounters(name)
     // a20: one per-user agg exchange + one single-partition global fold —
     // no join, no window, no broadcast anywhere
     val ab = c("a20_ab_test")
@@ -3655,10 +3668,8 @@ class ExtensionsSpec extends AnyFunSuite {
     // the modulus literal differs. A budget-dependent plan would mean
     // the labeled-sample size changes the execution strategy — the
     // same failure mode the IVF cell-count twin guards.
-    val base = Explain.counters(
-      SparkEntry.queries("dedup_quality_report")(spark, dir))
-    val twin = Explain.counters(
-      SparkEntry.queries("dedup_quality_report_b125")(spark, dir))
+    val base = builtCounters("dedup_quality_report")
+    val twin = builtCounters("dedup_quality_report_b125")
     info(s"base: $base\ntwin: $twin")
     for (k <- Seq("shufflesTree", "sortMergeJoins", "nestedLoopJoins",
         "broadcasts"))
@@ -3680,15 +3691,96 @@ class ExtensionsSpec extends AnyFunSuite {
     // plans with its real (single) partition, which drops the probe's
     // exchanges, so an unbuilt twin next to a built base would make the
     // comparison depend on which suites ran before this one.
-    val names = Seq("sim_ivf_topk", "sim_ivf_topk_s16")
-    names.foreach(n => SparkEntry.queries(n)(spark, dir).count())
-    val Seq(base, twin) =
-      names.map(n => Explain.counters(SparkEntry.queries(n)(spark, dir)))
+    val base = builtCounters("sim_ivf_topk")
+    val twin = builtCounters("sim_ivf_topk_s16")
     info(s"base: $base\ntwin: $twin")
     for (k <- Seq("shufflesTree", "sortMergeJoins", "nestedLoopJoins",
         "broadcasts"))
       assert(base.getOrElse(k, 0) == twin.getOrElse(k, 0),
         s"$k differs across cell counts: base=$base twin=$twin")
     ()
+  }
+
+  test("term index equals the inline tokenize-then-count derivation; eviction unpersists it") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    import graft.ops.TextOps.{docLengths, termFreqs, termStats}
+    // repeated tokens, surrounding whitespace, a text that is empty after
+    // trim (its one token is ""), a null text (no tokens, null length)
+    val fx = java.nio.file.Files.createTempDirectory("graft_term_index").toString
+    Seq((1L, Some("a b a  c")), (2L, Some("  a\tb  ")), (3L, Some("   ")),
+        (4L, None: Option[String]), (5L, Some("b b b")))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("web"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$fx/documents.parquet")
+    // a session of its own: the fixture's index never meets the suite's
+    val s = spark.newSession()
+    val toks = Tables.load(s, fx, "documents").select(col("doc_id"),
+      explode(graft.functions.TextFns.tokens(col("text"))).as("tok"))
+    val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+    val df = tf.groupBy(col("tok"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    def same(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.schema.map(f => (f.name, f.dataType)) ==
+        b.schema.map(f => (f.name, f.dataType)))
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"${a.collect().toSeq} vs ${b.collect().toSeq}")
+    }
+    same(termFreqs(s, fx), tf)
+    same(termStats(s, fx), df)
+    // one row per document; a null text's null length is the only extra
+    same(docLengths(s, fx).filter(col("dl").isNotNull), dl)
+    assert(docLengths(s, fx).as[(Long, Option[Long])].collect().toMap ==
+      Map(1L -> Some(4L), 2L -> Some(2L), 3L -> Some(1L), 4L -> None,
+        5L -> Some(3L)))
+    assert(termFreqs(s, fx).filter(col("doc_id") === 1L)
+      .as[(Long, String, Long)].collect().toSet ==
+      Set((1L, "a", 2L), (1L, "b", 1L), (1L, "c", 1L)))
+    assert(termStats(s, fx).filter(col("tok") === "")
+      .as[(String, Long, Long)].collect().toSeq == Seq(("", 1L, 1L)))
+
+    // each frame is its own Memo key: pushing the index out of the
+    // bounded store unpersists all three
+    val frames = Seq(termFreqs(s, fx), termStats(s, fx), docLengths(s, fx))
+    assert(frames.forall(_.storageLevel != StorageLevel.NONE))
+    val tag = s"termIndexEvictProbe_${System.nanoTime()}"
+    (1 to 192).foreach(i => graft.ops.Memo.of(s, fx, s"$tag$i")(i))
+    assert(frames.forall(_.storageLevel == StorageLevel.NONE),
+      frames.map(_.storageLevel).toString)
+  }
+
+  test("text_bm25 and text_tfidf read only the cached term index") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // built here, not by whichever suite ran before: the pin holds in any
+    // suite order
+    graft.ops.TextOps.buildTermIndex(spark, dir)
+    val walk = new AdaptiveSparkPlanHelper {}
+    def cachesRead(p: org.apache.spark.sql.execution.SparkPlan) =
+      walk.collectWithSubqueries(p) {
+        case m: InMemoryTableScanExec => m.relation.cacheBuilder }
+    val index = Seq(graft.ops.TextOps.termFreqs _,
+        graft.ops.TextOps.termStats _, graft.ops.TextOps.docLengths _)
+      .flatMap(f => cachesRead(f(spark, dir).queryExecution.executedPlan))
+    assert(index.size == 3)
+    for (name <- Seq("text_bm25", "text_tfidf")) {
+      val q = SparkEntry.queries(name)(spark, dir)
+      q.collect()
+      // the final (post-AQE) plan, subqueries included; a cached frame's
+      // own build plan is not part of the query's execution
+      val plan = q.queryExecution.executedPlan
+      val nodes = walk.collectWithSubqueries(plan) { case p => p }
+      assert(nodes.collect { case g: GenerateExec => g }.isEmpty,
+        s"$name tokenizes per call:\n$plan")
+      assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty,
+        s"$name scans a source file:\n$plan")
+      val read = cachesRead(plan)
+      assert(read.nonEmpty && read.forall(b => index.exists(_ eq b)),
+        s"$name reads a cache outside the term index:\n$plan")
+    }
   }
 }
