@@ -26,9 +26,9 @@ import org.apache.spark.sql.DataFrame
   *    dead.
   *
   * Peak checkpoint storage is therefore one query's worth instead of the
-  * whole run's. Frames superseded INSIDE an op (pagerank round k when
-  * round k+1 materializes, a star-contraction phase's predecessor) are
-  * unpersisted at the site instead — they don't survive to the boundary.
+  * whole run's. Frames superseded INSIDE an op (a star-contraction
+  * phase's predecessor) are unpersisted at the site instead — they
+  * don't survive to the boundary.
   */
 object Scratch {
   private val pending = new ConcurrentLinkedQueue[DataFrame]()

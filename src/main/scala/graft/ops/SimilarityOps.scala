@@ -1,7 +1,10 @@
 package graft.ops
 
+import scala.reflect.ClassTag
 import graft.Tables
 import graft.functions.TextFns.cosine
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1156,17 +1159,23 @@ object SimilarityOps extends OpGroup {
         .distinct()
       val w = Window.partitionBy(col("vec_a"))
         .orderBy(col("sim").desc, col("vec_b").asc)
-      // sized for materialization (Parts): N·k narrow edge rows ≈ 2×
-      // the parquet embedding bytes; every consumer (triangle distinct,
-      // pagerank joins, margin rescoring) forwards edges into its own
-      // shuffle, so the scan stages need partitions ∝ edge bytes, not
-      // the session's shuffle constant
+      // sized for materialization (Parts): every consumer (triangle
+      // distinct, the graph loops' adjacency, margin rescoring) forwards
+      // edges into its own shuffle, so the scan stages need partitions
+      // ∝ edge bytes, not the session's shuffle constant
       Parts.sized(
         pairs.withColumn("rank", row_number().over(w).cast("int"))
           .filter(col("rank") <= knnK),
-        Parts.sourceBytes(s, dir, "embeddings") * 2)
+        knnGraphBytes(s, dir))
         .cache()
     }
+
+  /** Size estimate of the kNN graph: N·k narrow edge rows ≈ 2× the
+    * parquet embedding bytes. Sizes the cached artifact and the graph
+    * loops' vertex partitioning alike.
+    */
+  private def knnGraphBytes(s: SparkSession, dir: String): Long =
+    Parts.sourceBytes(s, dir, "embeddings") * 2
 
   private lazy val knnJoinSql =
     s"""WITH $ivfCellsCtes,
@@ -1276,9 +1285,8 @@ object SimilarityOps extends OpGroup {
   // neighbors sits in a dense semantic region (prototypical content);
   // low-rank nodes are outliers. Runs on [[knnJoin]]'s N·k edge list,
   // never the corpus — the whole point of building the linear-size graph
-  // first. Fixed [[prIters]] power iterations; per round one join on the
-  // src id + one hash-agg on the dst id, the plan shape that holds at
-  // any scale (GraphX/Pregel does the same joins under the hood).
+  // first. Fixed [[prIters]] power iterations in [[graphRounds]]: each
+  // vertex sends r/outdeg along its out-edges, one keyed sum per round.
   //
   // Determinism: ALL-INTEGER arithmetic — ranks live in pico-units
   // (1e12 total mass), every divide is integer division on positive
@@ -1292,10 +1300,58 @@ object SimilarityOps extends OpGroup {
   private val prMassPico = 1000000000000L
 
   /** kNN edge list (src → dst) — a narrow projection of the cached
-    * [[knnJoin]] graph, shared by every power-iteration round.
+    * [[knnJoin]] graph, shared by the graph operators.
     */
   private def knnEdges(s: SparkSession, dir: String): DataFrame =
     knnJoin(s, dir).select(col("vec_a").as("src"), col("vec_b").as("dst"))
+
+  /** The kNN edges as (src, dst) pairs, for [[graphRounds]]. */
+  private def knnEdgePairs(s: SparkSession, dir: String): RDD[(Long, Long)] =
+    knnEdges(s, dir).rdd.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** Vertex partition count of the graph loops: the knnGraph artifact's
+    * own [[Parts]] estimate, so bench scale runs every round in one
+    * partition.
+    */
+  private def graphParts(s: SparkSession, dir: String): Int =
+    Parts.forBytes(knnGraphBytes(s, dir))
+
+  /** Fixed-round message passing over a graph, co-partitioned.
+    *
+    * Vertex attributes `nodes` and the adjacency (each `edges` key → all
+    * its partners, grouped once per call) share one HashPartitioner, so
+    * joining the state to either is narrow in every round. A round sends
+    * messages from each vertex with adjacency, sums them per target with
+    * one `reduceByKey` into the same partitioner, and left-joins them
+    * back onto every vertex: one shuffle per round, and none at all with
+    * one partition — there the message step keeps its partitioner (one
+    * partition holds every key), so Spark runs all rounds in one stage.
+    *
+    * Lineage instead of per-round checkpoints: a lost shuffle output is
+    * recomputed by Spark, and no round re-plans its predecessors the way
+    * a nested DataFrame plan would. The returned RDD holds each
+    * vertex's attribute and final state.
+    */
+  private[graft] def graphRounds[A: ClassTag, S: ClassTag, M: ClassTag](
+      nodes: RDD[(Long, A)], edges: RDD[(Long, Long)], parts: Int,
+      rounds: Int)(init: A => S)(
+      send: (S, Array[Long]) => Iterator[(Long, M)])(
+      merge: (M, M) => M,
+      update: (A, Option[M]) => S): RDD[(Long, (A, S))] = {
+    val part = new HashPartitioner(parts)
+    val vs = nodes.partitionBy(part)
+    val adj = edges.groupByKey(part).mapValues(_.toArray)
+    var state = vs.mapValues(a => (a, init(a)))
+    (1 to rounds).foreach { _ =>
+      val msgs = adj.join(state).mapPartitions(
+        _.flatMap { case (_, (nb, (_, st))) => send(st, nb) },
+        preservesPartitioning = parts == 1)
+        .reduceByKey(part, merge)
+      state = vs.leftOuterJoin(msgs)
+        .mapValues { case (a, m) => (a, update(a, m)) }
+    }
+    state
+  }
 
   // ---------------------------------------------------------------------
   // Triangle count + global clustering coefficient over the kNN graph —
@@ -1478,57 +1534,24 @@ object SimilarityOps extends OpGroup {
        |    AS clustering_ppm
        |FROM ne, tri, wed""".stripMargin
 
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
-    // nodes is referenced in every round's left join (and the count) —
-    // one materialization instead of prIters+1 table scans
-    val nodes = emb(s, dir).select(col("vec_id")).localCheckpoint()
+  def pagerank(s: SparkSession, dir: String): DataFrame =
+    pagerank(s, dir, graphParts(s, dir))
+
+  private[graft] def pagerank(s: SparkSession, dir: String,
+      parts: Int): DataFrame = {
+    val nodes = emb(s, dir).select(col("vec_id")).rdd
+      .map(r => (r.getLong(0), ()))
     // node count to the driver: one scalar, the k-means-centroid shape
     val n = nodes.count()
     val base = prMassPico / n
     val teleport = base * 15L / 100L
-    val edges = knnEdges(s, dir)
-    // edges ⋈ outdeg is round-invariant: hoist it out of the loop and
-    // materialize, so each round is ONE join on src + one agg on dst
-    // instead of re-deriving the degree table and re-joining it 5×
-    val outEdges = edges
-      .join(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")),
-        Seq("src"))
-      .localCheckpoint()
-    var r = nodes.select(col("vec_id"), lit(base).as("r"))
-    (1 to prIters).foreach { i =>
-      val contrib = outEdges
-        .join(r.withColumnRenamed("vec_id", "src"), Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("r div deg")).as("m"))
-      // Truncate the lineage each round (eager localCheckpoint): without
-      // it round k's lazy plan NESTS rounds 1..k-1, so the optimizer
-      // re-plans (and, under any cache miss, re-executes) a plan whose
-      // size grows linearly per round — O(iters²) total work and ~1.8 s
-      // of pure driver planning per run at 5 rounds (measured r13). The
-      // checkpoint holds one N-row rank frame per round — the iterative-
-      // algorithm shape GraphX/Pregel materializes the same way — and is
-      // recomputed inside every invocation (nothing persists across runs).
-      val prev = r
-      r = nodes
-        .join(contrib.withColumnRenamed("dst", "vec_id"), Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          (lit(teleport) +
-            expr(s"(85 * coalesce(m, 0L)) div 100")).as("r"))
-        .localCheckpoint()
-      // Round k's eager checkpoint has materialized, so round k-1's rank
-      // blocks are dead — release them NOW instead of holding prIters
-      // frames until a driver GC (storage stays O(1) frames per run).
-      // (RDD-level release: Dataset.unpersist can't see checkpoint
-      // blocks — GraftSqlBridge.releaseCheckpoint scaladoc.)
-      if (i > 1) org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(prev)
-    }
-    // The final round's checkpoint backs the returned plan — released at
-    // the next query boundary. nodes/outEdges fed only the (now
-    // materialized) rounds, so their blocks are dead already.
-    org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(nodes)
-    org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(outEdges)
-    Scratch.track(r)
-    r.select(col("vec_id"), col("r").as("pr_pico"))
+    // Long `/` truncates exactly as the oracle's `//` on these positive
+    // integers
+    val ranks = graphRounds(nodes, knnEdgePairs(s, dir), parts, prIters)(
+      _ => base)((r, out) => out.iterator.map(_ -> r / out.length))(
+      _ + _, (_, m) => teleport + 85L * m.getOrElse(0L) / 100L)
+    s.createDataFrame(ranks.map { case (v, (_, r)) => (v, r) })
+      .toDF("vec_id", "pr_pico")
   }
 
   /** One unrolled power-iteration round as a CTE pair. */
@@ -1638,40 +1661,41 @@ object SimilarityOps extends OpGroup {
   // weak-supervision primitive for training data: a small curated gold
   // set spreads labels through embedding space, and agreement with the
   // held-back truth measures how much supervision the corpus geometry
-  // itself carries. Per round: one join of the N·k edge list against
-  // current labels + one (node, label) hash-agg + one per-node
-  // row_number — every step keyed, nothing corpus-quadratic; rounds are
-  // fixed, so the oracle unrolls the same three CTEs.
+  // itself carries. Rounds run in [[graphRounds]]: each labeled vertex
+  // votes its label to every vertex that counts it among its k nearest,
+  // and the exact per-label counts are summed per voter — keyed,
+  // nothing corpus-quadratic; rounds are fixed, so the oracle unrolls
+  // the same three CTEs.
   // ---------------------------------------------------------------------
   val lpIters = 3
 
-  def labelPropagation(s: SparkSession, dir: String): DataFrame = {
+  def labelPropagation(s: SparkSession, dir: String): DataFrame =
+    labelPropagation(s, dir, graphParts(s, dir))
+
+  private[graft] def labelPropagation(s: SparkSession, dir: String,
+      parts: Int): DataFrame = {
     val seed = substring(graft.functions.TextFns.fastMd5(
       concat(lit("lp|"), col("vec_id").cast("string"))), 1, 1) < "4"
     val nodes = emb(s, dir)
-      .select(col("vec_id"), col("label"), seed.as("is_seed"))
-    val edges = knnEdges(s, dir)
-    var lab = nodes.select(col("vec_id"),
-      when(col("is_seed"), col("label")).as("lab"))
-    (1 to lpIters).foreach { _ =>
-      val votes = edges
-        .join(lab.withColumnRenamed("vec_id", "dst"), Seq("dst"))
-        .filter(col("lab").isNotNull)
-        .groupBy(col("src"), col("lab")).agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("c").desc, col("lab").asc)
-      val winner = votes.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("src").as("vec_id"), col("lab").as("new_lab"))
-      lab = nodes.join(winner, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          when(col("is_seed"), col("label"))
-            .otherwise(col("new_lab")).as("lab"))
-    }
-    nodes.join(lab, Seq("vec_id"))
-      .select(col("vec_id"), col("label"), col("is_seed"),
-        coalesce(col("lab"), lit(-1)).as("prop_label"),
-        (coalesce(col("lab"), lit(-1)) === col("label")).as("correct"))
+      .select(col("vec_id"), col("label"), seed.as("is_seed")).rdd
+      .map(r => (r.getLong(0),
+        (if (r.isNullAt(1)) None else Some(r.getInt(1)), r.getBoolean(2))))
+    // keyed by dst: a vertex's label goes to the srcs that point at it
+    val byDst = knnEdgePairs(s, dir).map(_.swap)
+    val labs = graphRounds(nodes, byDst, parts, lpIters) {
+      case (label, isSeed) => if (isSeed) label else None
+    }((lab, srcs) =>
+      lab.iterator.flatMap(l => srcs.iterator.map(_ -> Map(l -> 1L))))(
+      (a, b) => b.foldLeft(a) { case (m, (l, c)) =>
+        m.updated(l, m.getOrElse(l, 0L) + c) },
+      { case ((label, isSeed), votes) =>
+        // ties go to (count desc, label asc), the oracle's row_number
+        if (isSeed) label
+        else votes.map(_.minBy { case (l, c) => (-c, l) }._1) })
+    s.createDataFrame(labs.map { case (v, ((label, isSeed), lab)) =>
+      val prop = lab.getOrElse(-1)
+      (v, label, isSeed, prop, label.map(_ == prop))
+    }).toDF("vec_id", "label", "is_seed", "prop_label", "correct")
   }
 
   /** One unrolled propagation round: votes → per-node majority → labels. */

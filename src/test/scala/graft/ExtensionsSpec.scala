@@ -34,6 +34,30 @@ class ExtensionsSpec extends AnyFunSuite {
     Explain.counters(SparkEntry.queries(name)(spark, dir))
   }
 
+  /** (stages, shuffle map stages) submitted while `body` runs. The
+    * listener bus is drained before the listener joins and before it is
+    * read, so no other call's stage is counted and none is missed.
+    */
+  private def stagesOf(body: => Unit): (Int, Int) = {
+    import org.apache.spark.GraftTestBridge
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val maps = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet()
+        if (GraftTestBridge.isShuffleMap(e.stageInfo)) maps.incrementAndGet()
+      }
+    }
+    GraftTestBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftTestBridge.drainListeners(sc) }
+    finally sc.removeSparkListener(listener)
+    (stages.get, maps.get)
+  }
+
   test("streaming sessionize (flatMapGroupsWithState) matches batch on closed sessions") {
     import spark.implicits._
     val batch = Sessionize.sessionizeBatch(spark, dir)
@@ -2324,7 +2348,10 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(ranks == 0, "rank column is not a dense 1..n prefix")
   }
 
-  test("pagerank equals the integer power-iteration model replay") {
+  /** Driver replay of [[graft.ops.SimilarityOps.pagerank]]: integer
+    * power iteration over the collected kNN graph.
+    */
+  private def pagerankReplay(): Map[Long, Long] = {
     import spark.implicits._
     val edges = graft.ops.SimilarityOps.knnJoin(spark, dir)
       .select("vec_a", "vec_b").as[(Long, Long)].collect()
@@ -2341,9 +2368,71 @@ class ExtensionsSpec extends AnyFunSuite {
       }
       r = nodes.map(v => v -> (teleport + 85L * in.getOrElse(v, 0L) / 100L)).toMap
     }
+    r
+  }
+
+  /** Seed flags of [[graft.ops.SimilarityOps.labelPropagation]]. */
+  private def lpSeeds(): Map[Long, Boolean] = {
+    import spark.implicits._
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    Tables.load(spark, dir, "embeddings").select("vec_id").as[Long]
+      .collect().map(v => v -> (md5hex(s"lp|$v").head < '4')).toMap
+  }
+
+  /** Driver replay of [[graft.ops.SimilarityOps.labelPropagation]]:
+    * vec_id → propagated label, -1 where none.
+    */
+  private def labelPropagationReplay(): Map[Long, Int] = {
+    import spark.implicits._
+    val edges = graft.ops.SimilarityOps.knnJoin(spark, dir)
+      .select("vec_a", "vec_b").as[(Long, Long)].collect()
+    val truth = Tables.load(spark, dir, "embeddings")
+      .select("vec_id", "label").as[(Long, Int)].collect().toMap
+    val isSeed = lpSeeds()
+    val outNb: Map[Long, Seq[Long]] = edges.groupBy(_._1)
+      .map { case (s, es) => s -> es.map(_._2).toSeq }
+    var lab: Map[Long, Option[Int]] =
+      truth.keys.map(v => v -> (if (isSeed(v)) Some(truth(v)) else None)).toMap
+    (1 to graft.ops.SimilarityOps.lpIters).foreach { _ =>
+      val next = truth.keys.map { v =>
+        if (isSeed(v)) v -> Some(truth(v))
+        else {
+          val votes = outNb.getOrElse(v, Seq.empty[Long]).flatMap(lab(_))
+            .groupBy(l => l).map { case (l, vs) => (l, vs.size) }
+          v -> (if (votes.isEmpty) None
+                else Some(votes.toSeq.minBy { case (l, c) => (-c, l) }._1))
+        }
+      }.toMap
+      lab = next
+    }
+    lab.map { case (v, l) => v -> l.getOrElse(-1) }
+  }
+
+  test("pagerank equals the integer power-iteration model replay") {
+    import spark.implicits._
+    val r = pagerankReplay()
     val got = graft.ops.SimilarityOps.pagerank(spark, dir)
       .as[(Long, Long)].collect().toMap
     assert(got == r, "pagerank diverged from the driver integer replay")
+    // the same rounds on one vertex partition and on four; nodes and
+    // adjacency shuffle once, and past one partition every round adds
+    // exactly one shuffle map stage
+    Seq(1, 4).foreach { p =>
+      var atP = Map.empty[Long, Long]
+      val (_, maps) = stagesOf {
+        atP = graft.ops.SimilarityOps.pagerank(spark, dir, p)
+          .as[(Long, Long)].collect().toMap
+      }
+      assert(atP == r, s"pagerank on $p partitions diverged from the replay")
+      val want = 2 + (if (p == 1) 0 else graft.ops.SimilarityOps.prIters)
+      assert(maps == want, s"pagerank on $p partitions ran $maps shuffle " +
+        s"map stages, want $want")
+    }
+    val edges = graft.ops.SimilarityOps.knnJoin(spark, dir)
+      .select("vec_a", "vec_b").as[(Long, Long)].collect()
+    val nodes = r.keys.toSeq.sorted
     // total mass stays ≤ 1 (truncation + dangling loss only shrinks it)
     assert(got.values.sum <= 1000000000000L)
     // centrality tracks in-degree: mean rank of above-median-indegree
@@ -2387,39 +2476,56 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("label propagation equals the majority-vote model replay") {
     import spark.implicits._
-    val edges = graft.ops.SimilarityOps.knnJoin(spark, dir)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect()
-    val truth = Tables.load(spark, dir, "embeddings")
-      .select("vec_id", "label").as[(Long, Int)].collect().toMap
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val isSeed = truth.keys.map(v => v -> (md5hex(s"lp|$v").head < '4')).toMap
-    val outNb: Map[Long, Seq[Long]] = edges.groupBy(_._1)
-      .map { case (s, es) => s -> es.map(_._2).toSeq }
-    var lab: Map[Long, Option[Int]] =
-      truth.keys.map(v => v -> (if (isSeed(v)) Some(truth(v)) else None)).toMap
-    (1 to graft.ops.SimilarityOps.lpIters).foreach { _ =>
-      val next = truth.keys.map { v =>
-        if (isSeed(v)) v -> Some(truth(v))
-        else {
-          val votes = outNb.getOrElse(v, Seq.empty[Long]).flatMap(lab(_))
-            .groupBy(l => l).map { case (l, vs) => (l, vs.size) }
-          v -> (if (votes.isEmpty) None
-                else Some(votes.toSeq.minBy { case (l, c) => (-c, l) }._1))
-        }
-      }.toMap
-      lab = next
+    val model = labelPropagationReplay()
+    // the op's own partitioning, then one vertex partition and four
+    Seq(None, Some(1), Some(4)).foreach { p =>
+      val df = p.fold(graft.ops.SimilarityOps.labelPropagation(spark, dir))(
+        graft.ops.SimilarityOps.labelPropagation(spark, dir, _))
+      val got = df.select("vec_id", "prop_label").as[(Long, Int)]
+        .collect().toMap
+      assert(got == model,
+        s"propagation on ${p.getOrElse("default")} partitions diverged " +
+          "from the driver replay")
     }
-    val got = graft.ops.SimilarityOps.labelPropagation(spark, dir)
-      .select("vec_id", "prop_label").as[(Long, Int)].collect().toMap
-    val model = lab.map { case (v, l) => v -> l.getOrElse(-1) }
-    assert(got == model, "propagation diverged from the driver replay")
+    val isSeed = lpSeeds()
     // spreading must label beyond the seed set
     val seeds = isSeed.count(_._2)
     val labeled = model.count(_._2 >= 0)
     info(s"seeds $seeds, labeled after ${graft.ops.SimilarityOps.lpIters} rounds: $labeled")
     assert(labeled > seeds, "propagation labeled nothing beyond the seeds")
+  }
+
+  test("graph loops recompute a dropped kNN-graph cache to the same rows") {
+    // A lost materialized block must recompute or fail loudly, never
+    // return different rows. Drop the knnGraph Memo cache's blocks, as a
+    // lost executor would, between the build and each call.
+    import spark.implicits._
+    import org.apache.spark.GraftTestBridge
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val sc = spark.sparkContext
+    val prWant = pagerankReplay()
+    val lpWant = labelPropagationReplay()
+    val ids = graft.ops.SimilarityOps.knnJoin(spark, dir)
+      .queryExecution.withCachedData
+      .collect { case r: InMemoryRelation =>
+        r.cacheBuilder.cachedColumnBuffers.id }
+    assert(ids.nonEmpty, "knnGraph is not a cached frame")
+    def blocks = ids.map(GraftTestBridge.rddBlocks(sc, _)).sum
+    def drop(): Unit = {
+      assert(blocks > 0, "knnGraph has no cached blocks to drop")
+      ids.foreach(GraftTestBridge.removeRdd(sc, _))
+      assert(blocks == 0, "knnGraph blocks survived removeRdd")
+    }
+    drop()
+    val pr = graft.ops.SimilarityOps.pagerank(spark, dir)
+      .as[(Long, Long)].collect().toMap
+    assert(pr == prWant,
+      "pagerank changed after the kNN graph's blocks were lost")
+    drop()
+    val lp = graft.ops.SimilarityOps.labelPropagation(spark, dir)
+      .select("vec_id", "prop_label").as[(Long, Int)].collect().toMap
+    assert(lp == lpWant,
+      "label propagation changed after the kNN graph's blocks were lost")
   }
 
   test("plan shapes: round-4 graph/sampling operators pinned") {
@@ -2446,20 +2552,19 @@ class ExtensionsSpec extends AnyFunSuite {
     val mips = c("sim_mips_topk")
     info(s"sim_mips_topk: $mips")
     assert(mips("broadcasts") >= 2, s"sim_mips_topk: $mips")
-    // pagerank and label propagation iterate keyed joins/aggs over the
-    // edge list — never a cartesian/nested-loop anywhere
-    // measured 22 static shuffles = 5 rounds × (edge join + dst agg +
-    // rank rebuild); AQE collapses the tiny ones at runtime. The pin
-    // catches a per-round plan regression (e.g. a lost cache replaying
-    // the cell self-join every round)
-    val pr = c("sim_pagerank")
-    info(s"sim_pagerank: $pr")
-    assert(pr("nestedLoopJoins") == 0 && pr("shuffles") <= 24,
-      s"sim_pagerank: $pr")
-    val lp = c("sim_label_propagation")
-    info(s"sim_label_propagation: $lp")
-    assert(lp("nestedLoopJoins") == 0 && lp("shuffles") <= 15,
-      s"sim_label_propagation: $lp")
+    // pagerank and label propagation run their rounds as one RDD loop
+    // (SimilarityOps.graphRounds), whose plan shows no exchange; pin the
+    // stages one call runs once the kNN graph exists. Measured 4 and 3:
+    // pagerank's node count, the node and adjacency map stages, and one
+    // stage for every round. A shuffle or a checkpoint per round adds
+    // stages per round and breaks the pin.
+    graft.ops.SimilarityOps.knnJoin(spark, dir).count()
+    Seq("sim_pagerank", "sim_label_propagation").foreach { name =>
+      val (stages, _) =
+        stagesOf(SparkEntry.queries(name)(spark, dir).collect())
+      info(s"$name: $stages stages per call")
+      assert(stages <= 6, s"$name ran $stages stages per call")
+    }
     // containment rides the capped LSH candidate pairs: keyed joins only.
     // c() builds the memoized candidate table first (a cold inline build
     // added the one-time LSH band exchanges, 7 against 4 warm); the

@@ -337,6 +337,15 @@ class GraftSpec extends AnyFunSuite {
     }
   }
 
+  /** Files whose site count differs from its classified count. */
+  private def siteDiffs(found: Map[String, Int],
+      classified: Map[String, (Int, String)], what: String): Seq[String] =
+    (found.keySet ++ classified.keySet).toSeq.sorted.flatMap { f =>
+      val got = found.getOrElse(f, 0)
+      val want = classified.get(f).map(_._1).getOrElse(0)
+      if (got != want) Seq(s"$f: $got $what sites, classified $want") else Nil
+    }
+
   test("cache-retention sweep: every persist/cache site is classified") {
     // Memo's bounded retention releases only frames it OWNS (the
     // top-level DataFrame of a Memo.of builder); a bare `.persist()` /
@@ -386,18 +395,46 @@ class GraftSpec extends AnyFunSuite {
         "corrupt-feed parsed JSON: a bounded quarantine file, one " +
           "plan-canonicalized entry, required by Spark's " +
           "corrupt-column-aggregation restriction")))
-    val diffs = (found.keySet ++ classified.keySet).toSeq.sorted.flatMap {
-      f =>
-        val got = found.getOrElse(f, 0)
-        val want = classified.get(f).map(_._1).getOrElse(0)
-        if (got != want)
-          Seq(s"$f: $got persist/cache sites, classified $want") else Nil
-    }
+    val diffs = siteDiffs(found, classified, "persist/cache")
     assert(diffs.isEmpty,
       "unclassified persist/cache sites — route shared frames through " +
         "Memo.of (bounded retention), release intermediates in the " +
         "builder, or classify here with the release story:\n  " +
         diffs.mkString("\n  "))
+  }
+
+  test("checkpoint sweep: every localCheckpoint site is classified") {
+    // An eager localCheckpoint's blocks live on one executor and have no
+    // lineage behind them: a lost block fails the query instead of
+    // recomputing. This sweep pins the exact per-file site count against
+    // the classification below, so a NEW site fails until it is either
+    // replaced by recoverable lineage (a shuffle, a Memo cache) or
+    // classified here with its release story — the cache-retention
+    // sweep's discipline applied to checkpoints.
+    val found = codeSites(java.util.regex.Pattern.compile(
+      "\\.localCheckpoint\\("))
+    val classified: Map[String, (Int, String)] = Map(
+      "ops/DedupOps.scala" -> ((10,
+        "Scratch-tracked: the dedup quality sample, ExactSubstr's k-gram " +
+          "table (x2). Released at the site (GraftSqlBridge" +
+          ".releaseCheckpoint): starContraction's superseded phase edges " +
+          "(x4 with its nodes and first edges, which back the returned " +
+          "labels) and min-label propagation's edges and superseded " +
+          "rounds (x3; the final round may back the Memo-cached clusters " +
+          "and is left to the ContextCleaner)")),
+      "ops/TextOps.scala" -> ((1,
+        "Scratch-tracked: perplexityBuckets' scored byLang frame")),
+      "ops/SimilarityOps.scala" -> ((2,
+        "Scratch-tracked: the triangle twins' canonical edge list and " +
+          "degree-oriented edges")),
+      "ops/SurrogateKeys.scala" -> ((1,
+        "withGlobalRowNumber's range-sorted rows: Scratch-tracked, or " +
+          "left to the ContextCleaner when the caller opts out")))
+    val diffs = siteDiffs(found, classified, "localCheckpoint")
+    assert(diffs.isEmpty,
+      "unclassified localCheckpoint sites — keep lineage recoverable " +
+        "(co-partition the loop, cache through Memo), or classify here " +
+        "with the release story:\n  " + diffs.mkString("\n  "))
   }
 
   test("one session builder: only Conf.scala calls SparkSession.builder") {

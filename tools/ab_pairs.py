@@ -9,9 +9,11 @@ other; A runs first in even pairs and B in odd ones, so a drift in the
 box's speed lands on both sides. `--workload` may be repeated; every pair
 then runs each workload in turn. Each run's result file is copied into
 `<out dir>/A` or `<out dir>/B`, which `perfbench/compare.py` reads. At the
-end this prints compare.py's table and, per workload and end-to-end
-metric, how many pairs B won: its value better than A's in the metric's
-better direction.
+end this prints compare.py's table; per workload and end-to-end metric,
+how many pairs B won (its value better than A's in the metric's better
+direction); and per workload and op, the median latency of the op's
+timed calls on each side, from the result files' `calls`. It exits with
+compare.py's status: 1 when any pairing reads `worse`.
 
 Each checkout builds into its own `.bench_build/` on its first run.
 Nothing under `perfbench/` is changed.
@@ -20,6 +22,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 
@@ -42,6 +45,16 @@ def run_one(checkout, workload, seed, seconds, dest):
     shutil.copy(src, os.path.join(dest, tag))
     with open(src) as f:
         return json.load(f)
+
+
+def op_medians(runs):
+    """{op: median seconds} over the timed calls of `runs`."""
+    by_op = {}
+    for r in runs:
+        for c in r["calls"]:
+            if c["pass"] > 0:
+                by_op.setdefault(c["op"], []).append(c["s"])
+    return {op: statistics.median(xs) for op, xs in by_op.items()}
 
 
 def main():
@@ -76,9 +89,9 @@ def main():
             pairs[w].append(got)
 
     print()
-    subprocess.run([sys.executable, os.path.join(ROOT, "perfbench",
-                                                 "compare.py"),
-                    os.path.join(o.out, "A"), os.path.join(o.out, "B")])
+    cmp = subprocess.run([sys.executable, os.path.join(ROOT, "perfbench",
+                                                       "compare.py"),
+                          os.path.join(o.out, "A"), os.path.join(o.out, "B")])
     print()
     print(f"{'workload':<16} {'metric':<13} B wins  failed A/B")
     for w in workloads:
@@ -91,6 +104,19 @@ def main():
                        for p in pairs[w])
             print(f"{w:<16} {m['name']:<13} {wins:>2}/{len(pairs[w]):<2}  "
                   f"{fails[0]}/{fails[1]}")
+
+    print()
+    print(f"{'workload':<16} {'op':<28} {'A median s':>10} "
+          f"{'B median s':>10} {'B/A':>6}")
+    for w in workloads:
+        med = {side: op_medians(p[side] for p in pairs[w]) for side in "AB"}
+        for op in sorted(med["A"].keys() | med["B"].keys()):
+            a, b = med["A"].get(op), med["B"].get(op)
+            cells = [f"{x:.4f}" if x else "-" for x in (a, b)]
+            cells.append(f"{b / a:.3f}" if a and b else "-")
+            print(f"{w:<16} {op:<28} {cells[0]:>10} {cells[1]:>10} "
+                  f"{cells[2]:>6}")
+    sys.exit(cmp.returncode)
 
 
 if __name__ == "__main__":
