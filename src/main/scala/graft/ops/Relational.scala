@@ -766,7 +766,7 @@ object Relational extends OpGroup {
         .agg(hll_sketch_agg(col("user_id")).as("sk"),
           countDistinct(col("user_id")).as("exact_users"))
         .write.mode("overwrite").parquet(path)
-    val sketches = s.read.parquet(path)
+    val sketches = Tables.parquet(s, path)
     val perType = sketches.select(col("event_type"), col("exact_users"),
       hll_sketch_estimate(col("sk")).as("est"))
     // Rollup reads ONLY the sketch table; the exact twin (events rescan)

@@ -68,7 +68,7 @@ object Warehouse extends OpGroup {
   /** Read a materialized layer back (S1). */
   def readLayer(spark: SparkSession, basePath: String,
       names: Seq[String]): Map[String, DataFrame] =
-    names.map(n => n -> spark.read.parquet(s"$basePath/$n")).toMap
+    names.map(n => n -> Tables.parquet(spark, s"$basePath/$n")).toMap
 
   /** Per-JVM materialization ROOT: two concurrent JVMs (tests alongside a
     * verify run, two CI jobs on one box) must never overwrite each
@@ -361,7 +361,7 @@ object Warehouse extends OpGroup {
         .sortWithinPartitions(col("ts"))
         .write.mode("overwrite").parquet(base)
     }
-    s.read.parquet(base)
+    Tables.parquet(s, base)
       .filter(col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
         col("ts") < lit("2024-01-12 00:00:00").cast("timestamp"))
       .agg(count(lit(1)).as("n_events"),
@@ -393,7 +393,7 @@ object Warehouse extends OpGroup {
           to_date(col("ts")).as("event_date"))
         .write.mode("overwrite").partitionBy("event_date").parquet(base)
     }
-    s.read.parquet(base)
+    Tables.parquet(s, base)
       .filter(col("event_date").between(
         lit("2024-01-10").cast("date"), lit("2024-01-11").cast("date")))
       .agg(count(lit(1)).as("n_events"),
@@ -445,7 +445,7 @@ object Warehouse extends OpGroup {
         .drop("_z")
         .write.mode("overwrite").parquet(base)
     }
-    s.read.parquet(base)
+    Tables.parquet(s, base)
       .filter(col("user_id") === 42 &&
         col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
         col("ts") < lit("2024-01-20 00:00:00").cast("timestamp"))
@@ -502,16 +502,16 @@ object Warehouse extends OpGroup {
         .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
       val n = math.max(1L, (bytes + compactTargetBytes - 1)
         / compactTargetBytes).toInt
-      val frg = s.read.parquet(frag)
+      val frg = Tables.parquet(s, frag)
       frg.repartition(n).write.mode("overwrite").parquet(comp)
       def sig(df: DataFrame): org.apache.spark.sql.Row = df.agg(
         count(lit(1)),
         sum(xxhash64(df.columns.map(col): _*)
           .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-      require(sig(s.read.parquet(comp)) == sig(frg),
+      require(sig(Tables.parquet(s, comp)) == sig(frg),
         "compaction changed table content")
     }
-    s.read.parquet(comp).groupBy(col("event_type"))
+    Tables.parquet(s, comp).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast(org.apache.spark.sql.types.DoubleType).as("sum_value"))
@@ -572,25 +572,25 @@ object Warehouse extends OpGroup {
   def timeTravel(s: SparkSession, dir: String): DataFrame = {
     val root = layerPath(dir, "time_travel")
     val manifestOk = new java.io.File(s"$root/_manifest").exists() &&
-      s.read.parquet(s"$root/_manifest").columns.contains("del")
+      Tables.parquet(s, s"$root/_manifest").columns.contains("del")
     if (!manifestOk) {
       val cents = floor(col("c_acctbal") * 100 + 0.5).cast("long").as("cents")
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), cents)
         .write.mode("overwrite").parquet(s"$root/v0")
-      s.read.parquet(s"$root/v0")
+      Tables.parquet(s, s"$root/v0")
         .select(col("c_custkey"), col("c_name"),
           when(col("c_custkey") % 10 === 0, col("cents") + 1000L)
             .otherwise(col("cents")).as("cents"))
         .write.mode("overwrite").parquet(s"$root/v1")
-      s.read.parquet(s"$root/v1")
+      Tables.parquet(s, s"$root/v1")
         .filter(col("c_custkey") % 97 =!= 0)
         .write.mode("overwrite").parquet(s"$root/v2")
       // v3 commits MERGE-ON-READ: no data files rewritten — the commit
       // is v2's file set plus a delete file (keys only); the reader
       // subtracts it. This is how a delete against a 100 TB version
       // costs O(deleted keys), not a table rewrite.
-      s.read.parquet(s"$root/v2")
+      Tables.parquet(s, s"$root/v2")
         .filter(col("c_custkey") % 31 === 0).select(col("c_custkey"))
         .write.mode("overwrite").parquet(s"$root/d3")
       s.createDataFrame(Seq(
@@ -598,14 +598,14 @@ object Warehouse extends OpGroup {
         .toDF("version", "rel", "del")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/_manifest")
     }
-    val versions = s.read.parquet(s"$root/_manifest")
+    val versions = Tables.parquet(s, s"$root/_manifest")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
     versions.map { case (v, rel, del) =>
-      val base = s.read.parquet(s"$root/$rel")
+      val base = Tables.parquet(s, s"$root/$rel")
       val resolved =
         if (del.isEmpty) base
-        else base.join(s.read.parquet(s"$root/$del"),
+        else base.join(Tables.parquet(s, s"$root/$del"),
           Seq("c_custkey"), "left_anti")
       resolved
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents_total"))
@@ -709,14 +709,14 @@ object Warehouse extends OpGroup {
     expiredDirs.foreach(d => rm(new java.io.File(s"$root/$d")))
     // the report: retained versions re-read THROUGH the republished
     // manifest (proving the post-vacuum read path), expired as tombstones
-    val live = s.read.parquet(s"$root/_manifest")
+    val live = Tables.parquet(s, s"$root/_manifest")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
     val liveRows = live.map { case (v, rel, del) =>
-      val base = s.read.parquet(s"$root/$rel")
+      val base = Tables.parquet(s, s"$root/$rel")
       val resolved =
         if (del.isEmpty) base
-        else base.join(s.read.parquet(s"$root/$del"),
+        else base.join(Tables.parquet(s, s"$root/$del"),
           Seq("c_custkey"), "left_anti")
       resolved.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents_total"))
         .select(lit(v).as("version"), lit("retained").as("status"),

@@ -276,7 +276,7 @@ object Sessionize extends OpGroup {
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     // RAW file schema (ts may be the nanos long) — Tables.load's converted
     // schema would mis-declare the column to the file source.
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquetSchema(s, s"$dir/events.parquet")
     // The file source wants a directory (or glob) — an exact file path is
     // rejected; a wildcard makes it resolve as a glob over the SF dir.
     val raw = s.readStream.schema(schema).format("parquet")
@@ -823,7 +823,7 @@ object Sessionize extends OpGroup {
       // against its PREDECESSOR snapshot, not read-while-overwriting its
       // own snap_$id (the GenLedger idempotency discipline)
       val gens = new GenLedger
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val q = feed.writeStream.outputMode("append")
@@ -836,7 +836,7 @@ object Sessionize extends OpGroup {
               .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
               .select(col("user_id"), unix_micros(col("ts")).as("_bts"),
                 col("event_id").as("_bid"), col("event_type"), col("value"))
-            val snap = s.read.parquet(gens.predecessor(id).getOrElse(snap0))
+            val snap = Tables.parquet(s, gens.predecessor(id).getOrElse(snap0))
             val j = snap.join(latest, snap("c_custkey") === latest("user_id"),
               "full_outer")
             val newer = latest("user_id").isNotNull &&
@@ -865,7 +865,7 @@ object Sessionize extends OpGroup {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      s.read.parquet(gens.latestOption.getOrElse(snap0))
+      Tables.parquet(s, gens.latestOption.getOrElse(snap0))
         .filter(!col("_del"))
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     }
@@ -914,7 +914,7 @@ object Sessionize extends OpGroup {
       // dominating the trigger)
       val (sidesDir, jDir) = (s"$run/sides", s"$run/j")
       var accSeen = false
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val cond = col("user_id") === col("s_user") &&
@@ -957,7 +957,7 @@ object Sessionize extends OpGroup {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      s.read.parquet(jDir)
+      Tables.parquet(s, jDir)
     }
 
   /** Incremental AGGREGATE maintenance: a running per-user (count, sum)
@@ -982,7 +982,7 @@ object Sessionize extends OpGroup {
         .filter(_.getName.startsWith("agg_"))
         .foreach(f => freshDir(f.getPath))
       val gens = new GenLedger
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val q = feed.writeStream.outputMode("append")
@@ -995,7 +995,7 @@ object Sessionize extends OpGroup {
               case None => part.select(col("user_id"), col("b_n").as("n_events"),
                 col("b_sum").as("sum_value"))
               case Some(p) =>
-                val run = s.read.parquet(p)
+                val run = Tables.parquet(s, p)
                 run.join(part, run("user_id") === part("user_id"), "full_outer")
                   .select(
                     coalesce(run("user_id"), part("user_id")).as("user_id"),
@@ -1015,7 +1015,7 @@ object Sessionize extends OpGroup {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      s.read.parquet(gens.latest)
+      Tables.parquet(s, gens.latest)
         .select(col("user_id"), col("n_events"),
           col("sum_value").cast(DoubleType).as("sum_value"))
     }
@@ -1052,7 +1052,7 @@ object Sessionize extends OpGroup {
         .filter(_.getName.startsWith("man_"))
         .foreach(f => freshDir(f.getPath))
       val gens = new GenLedger
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val q = feed.writeStream.outputMode("append")
@@ -1082,7 +1082,7 @@ object Sessionize extends OpGroup {
                 col("b_digest").as("digest"), col("b_min").as("min_doc"),
                 col("b_max").as("max_doc"))
               case Some(p) =>
-                val run = s.read.parquet(p)
+                val run = Tables.parquet(s, p)
                 run.join(part,
                   run("split") === part("split") &&
                     run("shard") === part("shard"), "full_outer")
@@ -1110,7 +1110,7 @@ object Sessionize extends OpGroup {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      s.read.parquet(gens.latest)
+      Tables.parquet(s, gens.latest)
     }
 
   // the split / shard / row-hash fragments come from Curate so the
@@ -1164,7 +1164,7 @@ object Sessionize extends OpGroup {
     // "store the applied version with the state" guard streamingCdcApply
     // uses, applied to a driver-held accumulator.
     var lastMerged = -1L
-    val schema = s.read.parquet(feedDir).schema
+    val schema = Tables.parquetSchema(s, feedDir)
     val feed = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 2).parquet(feedDir)
     val q = feed.writeStream.outputMode("append")
@@ -1212,7 +1212,7 @@ object Sessionize extends OpGroup {
         .filter(_.getName.startsWith("counts_"))
         .foreach(f => freshDir(f.getPath))
       val gens = new GenLedger
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val q = feed.writeStream.outputMode("append")
@@ -1225,7 +1225,7 @@ object Sessionize extends OpGroup {
             val next = gens.predecessor(id) match {
               case None => part.select(col("token"), col("b_n").as("n"))
               case Some(p) =>
-                val run = s.read.parquet(p)
+                val run = Tables.parquet(s, p)
                 run.join(part, run("token") === part("token"), "full_outer")
                   .select(
                     coalesce(run("token"), part("token")).as("token"),
@@ -1242,7 +1242,7 @@ object Sessionize extends OpGroup {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      s.read.parquet(gens.latest)
+      Tables.parquet(s, gens.latest)
         .orderBy(col("n").desc, col("token").asc)
         .limit(graft.ops.TextOps.topTokenK)
     }
@@ -1276,7 +1276,7 @@ object Sessionize extends OpGroup {
         .filter(_.getName.startsWith("users_"))
         .foreach(f => freshDir(f.getPath))
       val gens = new GenLedger
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val q = feed.writeStream.outputMode("append")
@@ -1289,7 +1289,7 @@ object Sessionize extends OpGroup {
               case None => part.select(col("b_user").as("user_id"),
                 col("b_conv").as("conv"), col("b_cents").as("cents"))
               case Some(p) =>
-                val run = s.read.parquet(p)
+                val run = Tables.parquet(s, p)
                 run.join(part, run("user_id") === part("b_user"),
                     "full_outer")
                   .select(
@@ -1313,7 +1313,7 @@ object Sessionize extends OpGroup {
       // support (NULL z, zero arms) instead of throwing on gens.latest —
       // the streamingCdcApply latestOption discipline
       graft.ops.AnalyticsOps.abReadout(gens.latestOption
-        .map(s.read.parquet(_))
+        .map(Tables.parquet(s, _))
         .getOrElse(s.range(0).select(col("id").as("user_id"),
           col("id").as("conv"), col("id").as("cents"))))
     }
@@ -1350,7 +1350,7 @@ object Sessionize extends OpGroup {
       .foreach(f => freshDir(f.getPath))
     val model = graft.ops.SimilarityOps.ivfModel(s, dir)
     var postings = List.empty[String]
-    val schema = s.read.parquet(feedDir).schema
+    val schema = Tables.parquetSchema(s, feedDir)
     val feed = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 2).parquet(feedDir)
     val q = feed.writeStream.outputMode("append")
@@ -1368,7 +1368,7 @@ object Sessionize extends OpGroup {
     try q.processAllAvailable()
     finally q.stop()
     graft.ops.SimilarityOps.ivfTopkFromCells(
-      s.read.parquet(postings.reverse: _*))
+      Tables.parquet(s, postings.reverse: _*))
   }
 
   /** Incremental MONITORING-statistic maintenance — the IVM family's
@@ -1393,7 +1393,7 @@ object Sessionize extends OpGroup {
         .filter(_.getName.startsWith("counts_"))
         .foreach(f => freshDir(f.getPath))
       val gens = new GenLedger
-      val schema = s.read.parquet(feedDir).schema
+      val schema = Tables.parquetSchema(s, feedDir)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2).parquet(feedDir)
       val q = feed.writeStream.outputMode("append")
@@ -1407,7 +1407,7 @@ object Sessionize extends OpGroup {
               case None => part.select(col("b_type").as("event_type"),
                 col("b_day").as("day"), col("b_x").as("x"))
               case Some(p) =>
-                val run = s.read.parquet(p)
+                val run = Tables.parquet(s, p)
                 run.join(part,
                   run("event_type") === part("b_type") &&
                     run("day") === part("b_day"), "full_outer")
@@ -1428,7 +1428,7 @@ object Sessionize extends OpGroup {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      graft.ops.TimeSeriesOps.cusumOver(s.read.parquet(gens.latest))
+      graft.ops.TimeSeriesOps.cusumOver(Tables.parquet(s, gens.latest))
     }
 
   private val streamingTopKMaintainSql =

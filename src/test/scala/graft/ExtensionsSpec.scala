@@ -34,18 +34,22 @@ class ExtensionsSpec extends AnyFunSuite {
     Explain.counters(SparkEntry.queries(name)(spark, dir))
   }
 
-  /** (stages, shuffle map stages) submitted while `body` runs. The
+  /** (jobs, stages, shuffle map stages) submitted while `body` runs. The
     * listener bus is drained before the listener joins and before it is
-    * read, so no other call's stage is counted and none is missed.
+    * read, so no other call's job or stage is counted and none is missed.
     */
-  private def stagesOf(body: => Unit): (Int, Int) = {
+  private def scheduled(body: => Unit): (Int, Int, Int) = {
     import org.apache.spark.GraftTestBridge
-    import org.apache.spark.scheduler.{SparkListener,
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
       SparkListenerStageSubmitted}
     val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val maps = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
         stages.incrementAndGet()
         if (GraftTestBridge.isShuffleMap(e.stageInfo)) maps.incrementAndGet()
@@ -55,7 +59,7 @@ class ExtensionsSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try { body; GraftTestBridge.drainListeners(sc) }
     finally sc.removeSparkListener(listener)
-    (stages.get, maps.get)
+    (jobs.get, stages.get, maps.get)
   }
 
   test("streaming sessionize (flatMapGroupsWithState) matches batch on closed sessions") {
@@ -457,6 +461,37 @@ class ExtensionsSpec extends AnyFunSuite {
       .filter(col("source_type") === "lab")
     assert(labOnly.count() ==
       layer("fact").filter(col("source_type") === "lab").count())
+  }
+
+  /** Row count and order-insensitive content hash of a frame. */
+  private def rowSig(df: org.apache.spark.sql.DataFrame) = df.agg(
+    count(lit(1)),
+    sum(xxhash64(df.columns.map(col): _*)
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
+
+  test("stamped parquet reads equal plain inference: sources, partitioned layer, stream generation") {
+    val s = spark.newSession()
+    // Tables.load reads events with nanosAsLong; compare under the same conf
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val layerDir = java.nio.file.Files.createTempDirectory("graft_stamp").toString
+    // the stage fact, written partitionBy(source_type) as every layer is
+    // (built by the roundtrip test above in this session: a memo hit)
+    Warehouse.writeLayer(
+      Map("fact" -> graft.etl.Stage.build(spark, dir)("fact")), layerDir)
+    Sessionize.streamingAggMaintain(spark, dir).collect()
+    val gen = new java.io.File(Warehouse.layerPath(dir, "agg_stream"))
+      .listFiles().filter(_.getName.startsWith("agg_")).map(_.getPath)
+      .maxBy(p => p.substring(p.lastIndexOf('_') + 1).toLong)
+    val paths = Tables.all.map(n => s"$dir/$n.parquet") ++
+      Seq(s"$layerDir/fact", gen)
+    paths.foreach { p =>
+      Tables.parquetSchema(s, p) // infer once; the reads below are hits
+      val plain = s.read.parquet(p)
+      val stamped = Tables.parquet(s, p)
+      assert(stamped.schema == plain.schema, s"$p: schema differs")
+      assert(Tables.parquetSchema(s, p) == plain.schema, s"$p")
+      assert(rowSig(stamped) == rowSig(plain), s"$p: rows differ")
+    }
   }
 
   test("multimodal frame sampling: constant fan-out, stable hashes") {
@@ -1357,6 +1392,59 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(graft.ops.Memo.of(spark, dir, tag)(7) == 7)
     assert(graft.ops.Memo.of(spark, dir, tag)(8) == 7)
+  }
+
+  test("a fresh session resolves every source table without a Spark job") {
+    Tables.all.foreach(n => Tables.load(spark.newSession(), dir, n).schema)
+    val (jobs, _, _) = scheduled {
+      val fresh = spark.newSession()
+      Tables.all.foreach(n => Tables.load(fresh, dir, n).schema)
+    }
+    assert(jobs == 0, s"loading ${Tables.all.size} tables ran $jobs jobs")
+  }
+
+  test("a rewritten parquet file is never read with its old schema") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fresh").toString
+    val target = s"$tmp/nation.parquet"
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/nation.parquet"),
+      java.nio.file.Paths.get(target))
+    val before = Tables.load(spark.newSession(), tmp, "nation")
+    assert(!before.columns.contains("n_extra"))
+    val n = before.count()
+    Tables.load(spark, dir, "nation").withColumn("n_extra", lit(7))
+      .write.mode("overwrite").parquet(target)
+    val s = spark.newSession()
+    val after = Tables.load(s, tmp, "nation")
+    assert(after.columns.contains("n_extra"), after.columns.mkString(","))
+    assert(after.schema == Tables.parquet(s, target).schema)
+    assert(Tables.parquetSchema(s, target) == s.read.parquet(target).schema)
+    assert(after.filter(col("n_extra") === 7).count() == n)
+  }
+
+  test("overfilling the schema scope never evicts a session artifact") {
+    import org.apache.spark.storage.StorageLevel
+    val dim = graft.etl.Stage.dimPatients(spark, dir)
+    dim.count()
+    assert(dim.storageLevel != StorageLevel.NONE)
+    val tag = s"schemaProbe_${System.nanoTime()}"
+    (1 to 600).foreach(i => graft.ops.Memo.schema(s"$tag$i")(
+      org.apache.spark.sql.types.StructType(Nil)))
+    assert(graft.ops.Memo.schemaCount <= 512,
+      s"${graft.ops.Memo.schemaCount} live schemas")
+    assert(graft.etl.Stage.dimPatients(spark, dir) eq dim)
+    assert(dim.storageLevel != StorageLevel.NONE)
+  }
+
+  test("time travel's warm call runs no schema-inference stages") {
+    // measured 7 once every version's schema is known: the manifest
+    // collect plus the version aggregates. A read that infers its schema
+    // adds a footer-job stage per manifest and version dir (14 in all).
+    val q = SparkEntry.queries("s_time_travel")
+    q(spark, dir).collect()
+    val (_, stages, _) = scheduled(q(spark, dir).collect())
+    info(s"s_time_travel: $stages stages per warm call")
+    assert(stages <= 7, s"s_time_travel ran $stages stages per warm call")
   }
 
   test("connected components collapse duplicate chains transitively") {
@@ -2421,7 +2509,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // exactly one shuffle map stage
     Seq(1, 4).foreach { p =>
       var atP = Map.empty[Long, Long]
-      val (_, maps) = stagesOf {
+      val (_, _, maps) = scheduled {
         atP = graft.ops.SimilarityOps.pagerank(spark, dir, p)
           .as[(Long, Long)].collect().toMap
       }
@@ -2560,8 +2648,8 @@ class ExtensionsSpec extends AnyFunSuite {
     // stages per round and breaks the pin.
     graft.ops.SimilarityOps.knnJoin(spark, dir).count()
     Seq("sim_pagerank", "sim_label_propagation").foreach { name =>
-      val (stages, _) =
-        stagesOf(SparkEntry.queries(name)(spark, dir).collect())
+      val (_, stages, _) =
+        scheduled(SparkEntry.queries(name)(spark, dir).collect())
       info(s"$name: $stages stages per call")
       assert(stages <= 6, s"$name ran $stages stages per call")
     }

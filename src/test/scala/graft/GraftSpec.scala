@@ -461,6 +461,29 @@ class GraftSpec extends AnyFunSuite {
       s"ConcurrentHashMap sites outside ops.Memo: $found")
   }
 
+  test("one parquet read: every inferring read goes through Tables.parquet") {
+    // A batch parquet read without a schema infers it from a footer in a
+    // Spark job, per call. Tables.parquet runs that job once per file
+    // identity per JVM; a bare read elsewhere brings the job back on
+    // every call. Reads that pass .schema(...) infer nothing and are not
+    // counted.
+    val found = codeSites(java.util.regex.Pattern.compile(
+      "\\bread(\\s*\\.\\s*options?\\([^)]*\\))*\\s*\\.\\s*" +
+        "(parquet\\(|format\\(\\s*\"parquet\"\\s*\\))"))
+    val classified: Map[String, (Int, String)] = Map(
+      "Tables.scala" -> ((2,
+        "the helper's own inference: Tables.parquet and " +
+          "Tables.parquetSchema, each memoized by the file stamp")),
+      "sources/Warehouse.scala" -> ((1,
+        "schemaEvolution's mergeSchema read: inference across the two " +
+          "generations' footers is the op's contract")))
+    val diffs = siteDiffs(found, classified, "inferring parquet read")
+    assert(diffs.isEmpty,
+      "parquet reads outside Tables.parquet — route them through it, " +
+        "or classify here with the reason the read must infer:\n  " +
+        diffs.mkString("\n  "))
+  }
+
   test("every query has an oracle or documented omission") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // Non-SQL-expressible ops are allowed to omit; list them explicitly.
