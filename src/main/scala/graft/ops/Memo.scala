@@ -56,8 +56,10 @@ object Memo {
 
     private val store = new ConcurrentHashMap[Any, Cell]()
     private val order = new java.util.ArrayDeque[(Any, Cell, Any)]()
+    private val builds = new java.util.concurrent.atomic.AtomicLong
 
     private def retain(key: Any, cell: Cell, v: Any): Unit = {
+      builds.incrementAndGet()
       val evicted = order.synchronized {
         order.addLast((key, cell, v))
         if (order.size > maxEntries) Option(order.pollFirst()) else None
@@ -80,6 +82,9 @@ object Memo {
     }
 
     def size: Int = store.size
+
+    /** Builds that completed, evictions notwithstanding. */
+    def built: Long = builds.get
   }
 
   private final case class Key(s: SparkSession, dir: String, tag: String)
@@ -93,10 +98,10 @@ object Memo {
   private val SessionEntries = 192
 
   /** A schema is a few hundred bytes. Measured at sf0.001: a first pass
-    * over all 228 ops reads 63 file sets (source tables, layers, layouts,
-    * version dirs), and each later pass adds 18 more (stream generations
-    * and vacuum's versions, rewritten per call and read once). 512 holds
-    * several dirs' first-pass sets while the per-call ones age out.
+    * over all 228 ops infers 45 (source tables, layers, layouts, version
+    * dirs), and a later pass none, since the files an op rewrites per
+    * call (stream generations, vacuum's versions) are read back with
+    * their writer's schema. 512 holds several dirs' first-pass sets.
     */
   private val SchemaEntries = 512
 
@@ -115,4 +120,9 @@ object Memo {
 
   /** Live schema count. */
   private[graft] def schemaCount: Int = schemas.size
+
+  /** Schemas inferred so far; unlike [[schemaCount]] it still moves once
+    * the scope is full.
+    */
+  private[graft] def schemaInferences: Long = schemas.built
 }

@@ -571,8 +571,9 @@ object Warehouse extends OpGroup {
   // ---------------------------------------------------------------------
   def timeTravel(s: SparkSession, dir: String): DataFrame = {
     val root = layerPath(dir, "time_travel")
-    val manifestOk = new java.io.File(s"$root/_manifest").exists() &&
-      Tables.parquet(s, s"$root/_manifest").columns.contains("del")
+    val read = (rel: String) => Tables.parquet(s, s"$root/$rel")
+    val manifestOk = new java.io.File(s"$root/manifest").exists() &&
+      read("manifest").columns.contains("del")
     if (!manifestOk) {
       val cents = floor(col("c_acctbal") * 100 + 0.5).cast("long").as("cents")
       Tables.load(s, dir, "customer")
@@ -596,22 +597,30 @@ object Warehouse extends OpGroup {
       s.createDataFrame(Seq(
           (0, "v0", ""), (1, "v1", ""), (2, "v2", ""), (3, "v2", "d3")))
         .toDF("version", "rel", "del")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/_manifest")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
     }
-    val versions = Tables.parquet(s, s"$root/_manifest")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1)
-    versions.map { case (v, rel, del) =>
-      val base = Tables.parquet(s, s"$root/$rel")
-      val resolved =
-        if (del.isEmpty) base
-        else base.join(Tables.parquet(s, s"$root/$del"),
-          Seq("c_custkey"), "left_anti")
-      resolved
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents_total"))
-        .select(lit(v).as("version"), col("n_rows"), col("cents_total"))
+    resolveVersions(read).map { case (v, agg) =>
+      agg.select(lit(v).as("version"), col("n_rows"), col("cents_total"))
     }.reduce(_.unionByName(_))
   }
+
+  /** Each version the manifest lists, resolved through the reader
+    * contract — manifest first, then the pinned base files minus the
+    * version's delete file — to its (n_rows, cents_total) aggregate, in
+    * version order. `read(rel)` reads the directory `rel` of the table.
+    */
+  private def resolveVersions(
+      read: String => DataFrame): Seq[(Int, DataFrame)] =
+    read("manifest").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).sortBy(_._1)
+      .toSeq.map { case (v, rel, del) =>
+        val base = read(rel)
+        val resolved =
+          if (del.isEmpty) base
+          else base.join(read(del), Seq("c_custkey"), "left_anti")
+        v -> resolved.agg(count(lit(1)).as("n_rows"),
+          sum(col("cents")).as("cents_total"))
+      }
 
   private val timeTravelSql =
     """WITH v0 AS (
@@ -679,6 +688,14 @@ object Warehouse extends OpGroup {
         .otherwise(col("cents")).as("cents"))
     val v2 = v1.filter(col("c_custkey") % 97 =!= 0)
     val d3 = v2.filter(col("c_custkey") % 31 === 0).select(col("c_custkey"))
+    val manifest = Seq((0, "v0", ""), (1, "v1", ""), (2, "v2", ""),
+      (3, "v2", "d3"))
+    val retained = manifest.filter(_._1 >= vacuumRetainFrom)
+    val manifestDf = s.createDataFrame(retained).toDF("version", "rel", "del")
+    // every directory is written here, so its reads pass the writer's
+    // schema and infer nothing
+    val schemas = Map("v0" -> v0.schema, "v1" -> v1.schema,
+      "v2" -> v2.schema, "d3" -> d3.schema, "manifest" -> manifestDf.schema)
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -693,13 +710,9 @@ object Warehouse extends OpGroup {
         Duration.Inf)
       finally pool.shutdown()
     }
-    val manifest = Seq((0, "v0", ""), (1, "v1", ""), (2, "v2", ""),
-      (3, "v2", "d3"))
     // phase 1 — metadata unpublish: republish the manifest with only
     // retained versions, so no reader can pin an expired one
-    val retained = manifest.filter(_._1 >= vacuumRetainFrom)
-    s.createDataFrame(retained).toDF("version", "rel", "del")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_manifest")
+    manifestDf.coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
     // phase 2 — physical delete: directories unreferenced by ANY
     // retained version (set arithmetic over names, no data scan)
     val referenced = retained.flatMap(r => Seq(r._2, r._3)).filter(_.nonEmpty)
@@ -709,19 +722,12 @@ object Warehouse extends OpGroup {
     expiredDirs.foreach(d => rm(new java.io.File(s"$root/$d")))
     // the report: retained versions re-read THROUGH the republished
     // manifest (proving the post-vacuum read path), expired as tombstones
-    val live = Tables.parquet(s, s"$root/_manifest")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1)
-    val liveRows = live.map { case (v, rel, del) =>
-      val base = Tables.parquet(s, s"$root/$rel")
-      val resolved =
-        if (del.isEmpty) base
-        else base.join(Tables.parquet(s, s"$root/$del"),
-          Seq("c_custkey"), "left_anti")
-      resolved.agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents_total"))
-        .select(lit(v).as("version"), lit("retained").as("status"),
+    val liveRows = resolveVersions(rel =>
+        s.read.schema(schemas(rel)).parquet(s"$root/$rel"))
+      .map { case (v, agg) =>
+        agg.select(lit(v).as("version"), lit("retained").as("status"),
           col("n_rows"), col("cents_total"))
-    }.reduce(_.unionByName(_))
+      }.reduce(_.unionByName(_))
     val gone = manifest.map(_._1).filter(_ < vacuumRetainFrom)
     val goneRows = s.createDataFrame(gone.map(v => Tuple1(v)))
       .toDF("version")

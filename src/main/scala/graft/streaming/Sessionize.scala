@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.Tables
 import graft.ops.{Op, OpGroup}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sources.Warehouse.layerPath
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 /** Streaming operators (SURVEY.md §2.11 notes the reference has none —
   * streaming is the "real-time clinical decision support" future work,
@@ -317,12 +319,7 @@ object Sessionize extends OpGroup {
         .withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-      val name = s"memsink_dedup_${System.identityHashCode(out).toHexString}"
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      s.table(name)
+      runToMemory(s, out, "append")
     }
 
   private val streamingDedupSql =
@@ -360,8 +357,7 @@ object Sessionize extends OpGroup {
           col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAY"))
         .select(col("p_id"), col("user_id"), col("p_ts"),
           col("s_id"), col("s_ts"))
-      runToParquet(s, joined,
-        graft.sources.Warehouse.layerPath(dir, "join_stream"))
+      runToParquet(s, joined, layerPath(dir, "join_stream"))
     }
 
   private val streamingJoinSql =
@@ -397,8 +393,7 @@ object Sessionize extends OpGroup {
         .join(broadcast(dim), Seq("user_id"), "left")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("c_name"), col("c_mktsegment"))
-      runToParquet(s, out,
-        graft.sources.Warehouse.layerPath(dir, "enrich_stream"))
+      runToParquet(s, out, layerPath(dir, "enrich_stream"))
     }
 
   private val streamingEnrichSql =
@@ -428,12 +423,7 @@ object Sessionize extends OpGroup {
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
           col("n_events"))
-      val name = s"memsink_sw_${System.identityHashCode(out).toHexString}"
-      val q = out.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      s.table(name)
+      runToMemory(s, out, "complete")
     }
 
   private val sessionWindowedSql =
@@ -468,34 +458,34 @@ object Sessionize extends OpGroup {
     * memory); 4 matches this corpus' small horizon without degenerating
     * to sequential state maintenance.
     */
-  val statePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "4").toInt
+  val statePartitions: Int = 4
 
-  /** Fixed-location per-run state dir, wiped before use: the previous
-    * `ckpt_${System.nanoTime()}` scheme leaked a new checkpoint directory
-    * per invocation AND discarded the offset/commit logs that make a
-    * replayed batch detectable. A fixed path keeps disk usage O(1) across
-    * invocations; wiping it first means each invocation deliberately
-    * reprocesses the whole feed (these are fixpoint-verification runs —
-    * a deployment keeps the checkpoint and resumes instead).
+  /** Generation ledger for the at-least-once maintains: batch id → the
+    * generation that batch PRODUCED. [[maintain]]'s six users (cdc, agg,
+    * manifest, topk, ab, cusum) merge each batch against its PREDECESSOR
+    * generation (largest id' < id), never against its own previous
+    * output — deriving the merge input from the ledger makes the
+    * overwrite of gen_$id idempotent and removes the
+    * self-read-while-overwriting a replay would otherwise attempt (a
+    * `var cur` pointer merges a replayed batch TWICE). The ivf maintain
+    * keys its postings by batch id the same way, so a replay overwrites
+    * its own entry and the read-side union stays duplicate-free.
     */
-  /** Generation ledger for the merge-shaped IVM maintains (topk, cusum,
-    * manifest): batch id → the support-table path that batch PRODUCED.
-    * foreachBatch is at-least-once, so a replayed batch must merge
-    * against its PREDECESSOR generation (largest id' < id), never
-    * against its own previous output — deriving the merge input from
-    * the ledger makes the overwrite of gen_$id idempotent and removes
-    * the self-read-while-overwriting a replay would otherwise attempt
-    * (the streamingIvfMaintain idempotency discipline applied to the
-    * merge shape; a `var cur` pointer merges a replayed batch TWICE).
-    */
-  private[graft] final class GenLedger {
-    private var gens = scala.collection.immutable.TreeMap.empty[Long, String]
-    def predecessor(id: Long): Option[String] =
+  private[graft] final class GenLedger[G] {
+    private var gens = scala.collection.immutable.TreeMap.empty[Long, G]
+    def predecessor(id: Long): Option[G] =
       gens.rangeUntil(id).lastOption.map(_._2)
-    def record(id: Long, path: String): Unit = gens += id -> path
-    def latest: String = gens.last._2
-    def latestOption: Option[String] = gens.lastOption.map(_._2)
+    def record(id: Long, gen: G): Unit = gens += id -> gen
+    def latestOption: Option[G] = gens.lastOption.map(_._2)
+    def all: Seq[G] = gens.values.toSeq
+  }
+
+  /** A generation the library wrote, with the writer's schema: reading
+    * it back passes that schema, so a file written this call runs no
+    * footer-inference job.
+    */
+  private[graft] final case class Gen(path: String, schema: StructType) {
+    def read(s: SparkSession): DataFrame = s.read.schema(schema).parquet(path)
   }
 
   /** Feed-snapshot currency check for the `$root/feed` idiom: the feed
@@ -623,7 +613,7 @@ object Sessionize extends OpGroup {
   private def feedFor(s: SparkSession, dir: String, tag: String): String = {
     val (_, table, build) = feedSpecs.find(_._1 == tag).getOrElse(
       sys.error(s"unknown feed tag: $tag"))
-    val feedDir = s"${graft.sources.Warehouse.layerPath(dir, tag)}/feed"
+    val feedDir = s"${layerPath(dir, tag)}/feed"
     ensureFeed(dir, table, feedDir)(
       build(s, dir).write.mode("overwrite").parquet(feedDir))
     feedDir
@@ -678,15 +668,123 @@ object Sessionize extends OpGroup {
   private def runToParquet(s: SparkSession, df: DataFrame,
       root: String): DataFrame = {
     val run = freshDir(root)
-    val q = df.writeStream.outputMode("append")
+    drain(df.writeStream.outputMode("append")
       .format("parquet")
       .option("path", s"$run/data")
       .option("checkpointLocation", s"$run/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      .start())
     s.read.schema(df.schema).parquet(s"$run/data")
   }
+
+  /** Memory sink for the oracle-harness queries whose driver-side result
+    * set is the point (complete-mode windows, the bounded dedup): drain
+    * the query, then read its table.
+    */
+  private def runToMemory(s: SparkSession, df: DataFrame,
+      mode: String): DataFrame = {
+    // NB: prefix must not collide with Warehouse.catalogTables' graft_ views
+    val name = s"memsink_${System.identityHashCode(df).toHexString}"
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name)
+      .start())
+    s.table(name)
+  }
+
+  /** Run a finite harness query to the end of its input, then stop it. */
+  private def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable()
+    finally q.stop()
+
+  /** The one micro-batch harness of the `$root/feed` maintains: opens the
+    * tagged feed snapshot ([[feedFor]]) as a file stream of 2 files per
+    * trigger — 4 range files, so 2 micro-batches: trigger 2 exercises the
+    * merge-with-existing-state path each op exists to verify, and more
+    * triggers would only re-pay the per-trigger fixed cost — and runs
+    * `body` on each micro-batch until the feed is drained.
+    *
+    * The checkpoint lives at a fixed `$root/ckpt`, wiped before use. A
+    * fixed path keeps disk usage O(1) across invocations and keeps the
+    * offset/commit logs that make a replayed batch detectable (a per-run
+    * `ckpt_<nanos>` dir would leak one directory per call); wiping it
+    * first means each invocation deliberately reprocesses the whole feed
+    * (these are fixpoint-verification runs — a deployment keeps the
+    * checkpoint and resumes instead).
+    */
+  private def runFeed(s: SparkSession, dir: String, tag: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val feedDir = feedFor(s, dir, tag)
+    drain(s.readStream.schema(Tables.parquetSchema(s, feedDir))
+      .option("maxFilesPerTrigger", 2).parquet(feedDir)
+      .writeStream.outputMode("append")
+      .foreachBatch((batch: Dataset[Row], id: Long) => body(batch.toDF(), id))
+      .option("checkpointLocation", freshDir(s"${layerPath(dir, tag)}/ckpt"))
+      .start())
+  }
+
+  /** Delete the `prefix*` generations a previous run left under `root`:
+    * batch ids restart at 0 per run, so a prior run with more triggers
+    * would leave orphan generations (a disk leak, and a miscount in the
+    * per-batch generation audits).
+    */
+  private def wipeGens(root: String, prefix: String): Unit =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith(prefix))
+      .foreach(f => freshDir(f.getPath))
+
+  /** The merge-shaped maintenance loop of six `*_maintain` ops, on
+    * [[runFeed]]. Each non-empty micro-batch reduces to `partial(batch)`,
+    * a frame in the generation's own schema; the first generation is that
+    * partial, every later one `merge(predecessor, partial)` with the
+    * predecessor taken from the [[GenLedger]], written to
+    * `$root/$genPrefix$id`. A `seed` is written first as generation
+    * `${genPrefix}seed` under batch id -1, so batch 0 merges into it.
+    * `readout` gets the latest generation once the feed is drained (None
+    * only when no batch ran and there is no seed). The whole loop runs
+    * under the streaming confs with AQE off (see [[noAqe]]).
+    */
+  private def maintain(s: SparkSession, dir: String, tag: String,
+      genPrefix: String, seed: Option[DataFrame] = None)(
+      partial: DataFrame => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame)(
+      readout: Option[DataFrame] => DataFrame): DataFrame =
+    withNanosAsLong(s, noAqe) {
+      val root = layerPath(dir, tag)
+      wipeGens(root, genPrefix)
+      val gens = new GenLedger[Gen]
+      seed.foreach { df =>
+        val path = s"$root/${genPrefix}seed"
+        df.write.mode("overwrite").parquet(path)
+        gens.record(-1L, Gen(path, df.schema))
+      }
+      runFeed(s, dir, tag)(
+        maintainStep(gens, s"$root/$genPrefix", partial, merge))
+      readout(gens.latestOption.map(_.read(s)))
+    }
+
+  /** [[maintain]]'s per-batch step: batch `id` writes generation
+    * `$prefix$id` and records it. A replayed id reads the same
+    * predecessor and overwrites the same generation.
+    */
+  private[graft] def maintainStep(gens: GenLedger[Gen], prefix: String,
+      partial: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame)(
+      batch: DataFrame, id: Long): Unit =
+    if (!batch.isEmpty) {
+      val part = partial(batch)
+      val next = gens.predecessor(id)
+        .fold(part)(p => merge(p.read(batch.sparkSession), part))
+      val path = s"$prefix$id"
+      // coalesced: the state is key-sized; per-trigger multi-part writes
+      // are the small-files problem
+      next.coalesce(1).write.mode("overwrite").parquet(path)
+      gens.record(id, Gen(path, next.schema))
+    }
+
+  /** The sum of `run`'s and `part`'s column `c`, a missing side counted
+    * as `zero`.
+    */
+  private def added(run: DataFrame, part: DataFrame, c: String,
+      zero: Column = lit(0L)): Column =
+    coalesce(run(c), zero) + coalesce(part(c), zero)
 
   /** No-data micro-batches exist to advance the watermark with no new
     * input — they EMIT results for append-mode windowed aggs (a window
@@ -717,14 +815,7 @@ object Sessionize extends OpGroup {
     */
   def hourlyWindowed(s: SparkSession, dir: String): DataFrame =
     withNanosAsLong(s, noNoDataBatches) {
-      val agg = hourlyAgg(s, dir)
-      // NB: prefix must not collide with Warehouse.catalogTables' graft_ views
-      val name = s"memsink_hourly_${System.identityHashCode(agg).toHexString}"
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-      s.table(name)
+      runToMemory(s, hourlyAgg(s, dir), "complete")
     }
 
   /** SCALE variant: append mode + parquet file sink. A window row is
@@ -744,8 +835,7 @@ object Sessionize extends OpGroup {
       .option("path", s"$outDir/data")
       .option("checkpointLocation", s"$outDir/ckpt")
       .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    drain(q)
     // Explicit schema: with zero finalized windows (all data inside the
     // watermark horizon) the sink directory has no parquet files and
     // schema inference would throw instead of returning an empty frame.
@@ -797,78 +887,41 @@ object Sessionize extends OpGroup {
     * fan-in is bounded by maxFilesPerTrigger. The fixpoint is verified
     * against the SAME DuckDB oracle as the batch merge (m7_cdc_upsert).
     */
-  def streamingCdcApply(s: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      val root = layerPath(dir, "cdc_stream")
-      // feed registry: 4 ts-range files, consumed 2 per trigger => 2
-      // micro-batches (trigger 2 exercises the merge-with-existing-state
-      // path, the incremental property under test; more triggers only
-      // re-pay the per-trigger fixed cost without exercising anything new)
-      val feedDir = feedFor(s, dir, "cdc_stream")
-      // wipe snapshots of previous runs: batch ids restart at 0 per run,
-      // so a prior run with more triggers would leave orphan snap_N dirs
-      // (disk leak + a miscount in the per-batch snapshot audit)
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("snap_") && f.getName != "snap_seed")
-        .foreach(f => freshDir(f.getPath))
-      val snap0 = s"$root/snap_seed"
-      Tables.load(s, dir, "customer")
-        .filter(col("c_custkey") < 75)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          lit(Long.MinValue).as("_vts"), lit(Long.MinValue).as("_vid"),
-          lit(false).as("_del"))
-        .write.mode("overwrite").parquet(snap0)
-      // ledger, not a `var cur` pointer: a replayed batch must merge
-      // against its PREDECESSOR snapshot, not read-while-overwriting its
-      // own snap_$id (the GenLedger idempotency discipline)
-      val gens = new GenLedger
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id"))
-              .orderBy(col("ts").desc, col("event_id").desc)
-            val latest = batch
-              .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-              .select(col("user_id"), unix_micros(col("ts")).as("_bts"),
-                col("event_id").as("_bid"), col("event_type"), col("value"))
-            val snap = Tables.parquet(s, gens.predecessor(id).getOrElse(snap0))
-            val j = snap.join(latest, snap("c_custkey") === latest("user_id"),
-              "full_outer")
-            val newer = latest("user_id").isNotNull &&
-              (snap("c_custkey").isNull ||
-                col("_bts") > col("_vts") ||
-                (col("_bts") === col("_vts") && col("_bid") > col("_vid")))
-            val next = j.select(
-              coalesce(latest("user_id"), snap("c_custkey")).as("c_custkey"),
-              when(newer, coalesce(snap("c_name"), lit("(new)")))
-                .otherwise(snap("c_name")).as("c_name"),
-              when(newer, latest("value"))
-                .otherwise(snap("c_acctbal")).as("c_acctbal"),
-              when(newer, col("_bts")).otherwise(col("_vts")).as("_vts"),
-              when(newer, col("_bid")).otherwise(col("_vid")).as("_vid"),
-              when(newer, col("event_type") === "error")
-                .otherwise(coalesce(col("_del"), lit(false))).as("_del"))
-            val nextPath = s"$root/snap_$id"
-            // coalesced: the snapshot is dimension-sized; per-trigger
-            // multi-part writes are the small-files problem
-            next.coalesce(1).write.mode("overwrite").parquet(nextPath)
-            gens.record(id, nextPath)
-          }
-          ()
-        }
-        .option("checkpointLocation", freshDir(s"$root/ckpt"))
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      Tables.parquet(s, gens.latestOption.getOrElse(snap0))
-        .filter(!col("_del"))
+  def streamingCdcApply(s: SparkSession, dir: String): DataFrame = {
+    val seed = Tables.load(s, dir, "customer")
+      .filter(col("c_custkey") < 75)
+      .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
+        lit(Long.MinValue).as("_vts"), lit(Long.MinValue).as("_vid"),
+        lit(false).as("_del"))
+    maintain(s, dir, "cdc_stream", "snap_", Some(seed)) { batch =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id"))
+        .orderBy(col("ts").desc, col("event_id").desc)
+      batch.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+        .select(col("user_id"), unix_micros(col("ts")).as("_bts"),
+          col("event_id").as("_bid"), col("event_type"), col("value"))
+    } { (snap, latest) =>
+      val j = snap.join(latest, snap("c_custkey") === latest("user_id"),
+        "full_outer")
+      val newer = latest("user_id").isNotNull &&
+        (snap("c_custkey").isNull ||
+          col("_bts") > col("_vts") ||
+          (col("_bts") === col("_vts") && col("_bid") > col("_vid")))
+      j.select(
+        coalesce(latest("user_id"), snap("c_custkey")).as("c_custkey"),
+        when(newer, coalesce(snap("c_name"), lit("(new)")))
+          .otherwise(snap("c_name")).as("c_name"),
+        when(newer, latest("value"))
+          .otherwise(snap("c_acctbal")).as("c_acctbal"),
+        when(newer, col("_bts")).otherwise(col("_vts")).as("_vts"),
+        when(newer, col("_bid")).otherwise(col("_vid")).as("_vid"),
+        when(newer, col("event_type") === "error")
+          .otherwise(coalesce(col("_del"), lit(false))).as("_del"))
+    } { latest =>
+      latest.get.filter(!col("_del"))
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     }
+  }
 
   /** Incremental JOIN-view maintenance: the materialized view
     * J = purchases ⋈ signups (same 7-day interval semantics as
@@ -898,13 +951,10 @@ object Sessionize extends OpGroup {
     */
   def streamingJoinMaintain(s: SparkSession, dir: String): DataFrame =
     withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      val root = layerPath(dir, "joinivm_stream")
-      val feedDir = feedFor(s, dir, "joinivm_stream")
       // fresh (wiped) state root per invocation: the view dir is
       // append-mode, so a reused-but-unwiped dir would double every pair
       // on a second run
-      val run = freshDir(s"$root/run")
+      val run = freshDir(s"${layerPath(dir, "joinivm_stream")}/run")
       // P and S live in ONE accumulated side dir (both derive from the
       // same feed; projected apart at join time) — one append + one
       // listing per trigger instead of two of each, and the KB-sized
@@ -913,10 +963,9 @@ object Sessionize extends OpGroup {
       // in miniature (measured here as parquet job-commit overhead
       // dominating the trigger)
       val (sidesDir, jDir) = (s"$run/sides", s"$run/j")
-      var accSeen = false
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
+      // the view's schema once a trigger has appended to it (and to the
+      // sides)
+      var view = Option.empty[StructType]
       val cond = col("user_id") === col("s_user") &&
         col("p_ts") >= col("s_ts") &&
         col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAY")
@@ -931,33 +980,29 @@ object Sessionize extends OpGroup {
       def pairs(a: DataFrame, b: DataFrame): DataFrame =
         a.join(b, cond).select(col("p_id"), col("user_id"), col("p_ts"),
           col("s_id"), col("s_ts"))
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val (dp, ds) = (pSide(batch.toDF()), sSide(batch.toDF()))
-          // ΔJ against the PRE-batch side snapshot. The DELTA side of
-          // each term is broadcast — it is trigger-bounded by
-          // construction, so the accumulated side never moves (at 100 TB:
-          // scan the horizon-pruned bucketed side table, ship only the
-          // delta) — and the sides read carries the feed schema (same
-          // rows), skipping a per-trigger footer fetch.
-          val delta =
-            if (accSeen) {
-              val acc = s.read.schema(schema).parquet(sidesDir)
-              pairs(broadcast(dp), sSide(acc))
-                .unionByName(pairs(pSide(acc), broadcast(ds)))
-                .unionByName(pairs(broadcast(dp), ds))
-            } else pairs(broadcast(dp), ds)
-          delta.coalesce(1).write.mode("append").parquet(jDir)
-          // …then the whole delta appends to the accumulated sides
-          batch.coalesce(1).write.mode("append").parquet(sidesDir)
-          accSeen = true
-          ()
-        }
-        .option("checkpointLocation", s"$run/ckpt")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      Tables.parquet(s, jDir)
+      runFeed(s, dir, "joinivm_stream") { (batch, _) =>
+        val (dp, ds) = (pSide(batch), sSide(batch))
+        // ΔJ against the PRE-batch side snapshot. The DELTA side of
+        // each term is broadcast — it is trigger-bounded by
+        // construction, so the accumulated side never moves (at 100 TB:
+        // scan the horizon-pruned bucketed side table, ship only the
+        // delta) — and the sides read carries the feed schema (same
+        // rows), skipping a per-trigger footer fetch.
+        val delta =
+          if (view.isDefined) {
+            val acc = s.read.schema(batch.schema).parquet(sidesDir)
+            pairs(broadcast(dp), sSide(acc))
+              .unionByName(pairs(pSide(acc), broadcast(ds)))
+              .unionByName(pairs(broadcast(dp), ds))
+          } else pairs(broadcast(dp), ds)
+        delta.coalesce(1).write.mode("append").parquet(jDir)
+        // …then the whole delta appends to the accumulated sides
+        batch.coalesce(1).write.mode("append").parquet(sidesDir)
+        view = Some(delta.schema)
+      }
+      s.read.schema(view.getOrElse(
+        sys.error("stream_join_maintain: the feed had no micro-batch")))
+        .parquet(jDir)
     }
 
   /** Incremental AGGREGATE maintenance: a running per-user (count, sum)
@@ -972,53 +1017,21 @@ object Sessionize extends OpGroup {
     * the running table's sums use a DECIMAL accumulator so the fold
     * order cannot perturb a float result.
     */
-  def streamingAggMaintain(s: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      val root = layerPath(dir, "agg_stream")
-      val feedDir = feedFor(s, dir, "agg_stream")
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("agg_"))
-        .foreach(f => freshDir(f.getPath))
-      val gens = new GenLedger
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            val part = batch.groupBy(col("user_id"))
-              .agg(count(lit(1)).as("b_n"),
-                sum(col("value").cast(DecimalType(18, 2))).as("b_sum"))
-            val next = gens.predecessor(id) match {
-              case None => part.select(col("user_id"), col("b_n").as("n_events"),
-                col("b_sum").as("sum_value"))
-              case Some(p) =>
-                val run = Tables.parquet(s, p)
-                run.join(part, run("user_id") === part("user_id"), "full_outer")
-                  .select(
-                    coalesce(run("user_id"), part("user_id")).as("user_id"),
-                    (coalesce(col("n_events"), lit(0L)) +
-                      coalesce(col("b_n"), lit(0L))).as("n_events"),
-                    (coalesce(col("sum_value"), lit(0).cast(DecimalType(18, 2))) +
-                      coalesce(col("b_sum"), lit(0).cast(DecimalType(18, 2))))
-                      .cast(DecimalType(18, 2)).as("sum_value"))
-            }
-            val nextPath = s"$root/agg_$id"
-            next.coalesce(1).write.mode("overwrite").parquet(nextPath)
-            gens.record(id, nextPath)
-          }
-          ()
-        }
-        .option("checkpointLocation", freshDir(s"$root/ckpt"))
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      Tables.parquet(s, gens.latest)
-        .select(col("user_id"), col("n_events"),
-          col("sum_value").cast(DoubleType).as("sum_value"))
+  def streamingAggMaintain(s: SparkSession, dir: String): DataFrame = {
+    val dec = DecimalType(18, 2)
+    maintain(s, dir, "agg_stream", "agg_") { batch =>
+      batch.groupBy(col("user_id")).agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast(dec)).as("sum_value"))
+    } { (run, part) =>
+      run.join(part, Seq("user_id"), "full_outer").select(col("user_id"),
+        added(run, part, "n_events").as("n_events"),
+        added(run, part, "sum_value", lit(0).cast(dec)).cast(dec)
+          .as("sum_value"))
+    } { latest =>
+      latest.get.select(col("user_id"), col("n_events"),
+        col("sum_value").cast(DoubleType).as("sum_value"))
     }
+  }
 
   private val streamingAggMaintainSql =
     """SELECT user_id, COUNT(*) AS n_events,
@@ -1042,76 +1055,38 @@ object Sessionize extends OpGroup {
     * `*_maintain` ops). Covers the WHOLE corpus release (every document);
     * the curated-training-set manifest remains `curate_shard_manifest`.
     */
-  def streamingManifestMaintain(s: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      val fns = graft.functions.TextFns
-      val root = layerPath(dir, "manifest_stream")
-      val feedDir = feedFor(s, dir, "manifest_stream")
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("man_"))
-        .foreach(f => freshDir(f.getPath))
-      val gens = new GenLedger
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            val routed = batch.toDF().select(
-              col("doc_id"), col("n_chars"),
-              when(substring(fns.fastMd5(col("doc_id").cast("string")), 1, 2)
-                < graft.ops.TextOps.evalHexCeiling, lit("eval"))
-                .otherwise(lit("train")).as("split"),
-              (conv(substring(fns.fastMd5(concat(lit("shuf|"),
-                col("doc_id").cast("string"))), 1, 4), 16, 10).cast("long")
-                % graft.ops.Curate.trainingShards).cast("int").as("shard"),
-              conv(substring(fns.fastMd5(concat(lit("man|"),
-                col("doc_id").cast("string"), lit(":"),
-                fns.fingerprint(col("text")))), 1, 8), 16, 10)
-                .cast("long").as("rh"))
-            val part = routed.groupBy(col("split"), col("shard"))
-              .agg(count(lit(1)).cast("long").as("b_n"),
-                sum(col("n_chars")).cast("long").as("b_chars"),
-                sum(col("rh")).cast("long").as("b_digest"),
-                min(col("doc_id")).as("b_min"),
-                max(col("doc_id")).as("b_max"))
-            val next = gens.predecessor(id) match {
-              case None => part.select(col("split"), col("shard"),
-                col("b_n").as("n_docs"), col("b_chars").as("n_chars"),
-                col("b_digest").as("digest"), col("b_min").as("min_doc"),
-                col("b_max").as("max_doc"))
-              case Some(p) =>
-                val run = Tables.parquet(s, p)
-                run.join(part,
-                  run("split") === part("split") &&
-                    run("shard") === part("shard"), "full_outer")
-                  .select(
-                    coalesce(run("split"), part("split")).as("split"),
-                    coalesce(run("shard"), part("shard")).as("shard"),
-                    (coalesce(col("n_docs"), lit(0L)) +
-                      coalesce(col("b_n"), lit(0L))).as("n_docs"),
-                    (coalesce(run("n_chars"), lit(0L)) +
-                      coalesce(col("b_chars"), lit(0L))).as("n_chars"),
-                    (coalesce(col("digest"), lit(0L)) +
-                      coalesce(col("b_digest"), lit(0L))).as("digest"),
-                    least(coalesce(col("min_doc"), col("b_min")),
-                      coalesce(col("b_min"), col("min_doc"))).as("min_doc"),
-                    greatest(coalesce(col("max_doc"), col("b_max")),
-                      coalesce(col("b_max"), col("max_doc"))).as("max_doc"))
-            }
-            val nextPath = s"$root/man_$id"
-            next.coalesce(1).write.mode("overwrite").parquet(nextPath)
-            gens.record(id, nextPath)
-          }
-          ()
-        }
-        .option("checkpointLocation", freshDir(s"$root/ckpt"))
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      Tables.parquet(s, gens.latest)
-    }
+  def streamingManifestMaintain(s: SparkSession, dir: String): DataFrame = {
+    val fns = graft.functions.TextFns
+    maintain(s, dir, "manifest_stream", "man_") { batch =>
+      batch.select(
+        col("doc_id"), col("n_chars"),
+        when(substring(fns.fastMd5(col("doc_id").cast("string")), 1, 2)
+          < graft.ops.TextOps.evalHexCeiling, lit("eval"))
+          .otherwise(lit("train")).as("split"),
+        (conv(substring(fns.fastMd5(concat(lit("shuf|"),
+          col("doc_id").cast("string"))), 1, 4), 16, 10).cast("long")
+          % graft.ops.Curate.trainingShards).cast("int").as("shard"),
+        conv(substring(fns.fastMd5(concat(lit("man|"),
+          col("doc_id").cast("string"), lit(":"),
+          fns.fingerprint(col("text")))), 1, 8), 16, 10)
+          .cast("long").as("rh"))
+        .groupBy(col("split"), col("shard"))
+        .agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(col("n_chars")).cast("long").as("n_chars"),
+          sum(col("rh")).cast("long").as("digest"),
+          min(col("doc_id")).as("min_doc"),
+          max(col("doc_id")).as("max_doc"))
+    } { (run, part) =>
+      // least/greatest skip a NULL side
+      run.join(part, Seq("split", "shard"), "full_outer").select(
+        col("split"), col("shard"),
+        added(run, part, "n_docs").as("n_docs"),
+        added(run, part, "n_chars").as("n_chars"),
+        added(run, part, "digest").as("digest"),
+        least(run("min_doc"), part("min_doc")).as("min_doc"),
+        greatest(run("max_doc"), part("max_doc")).as("max_doc"))
+    }(_.get)
+  }
 
   // the split / shard / row-hash fragments come from Curate so the
   // maintained manifest and the batch release manifest are
@@ -1152,9 +1127,6 @@ object Sessionize extends OpGroup {
     * an abelian-group aggregate, the textbook IVM-friendly shape.)
     */
   def streamingGramMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Warehouse.layerPath
-    val root = layerPath(dir, "gram_stream")
-    val feedDir = feedFor(s, dir, "gram_stream")
     val d = 64
     val acc = new Array[Double](1 + d + d * (d + 1) / 2)
     // foreachBatch is at-least-once: a retried/replayed micro-batch would
@@ -1164,25 +1136,16 @@ object Sessionize extends OpGroup {
     // "store the applied version with the state" guard streamingCdcApply
     // uses, applied to a driver-held accumulator.
     var lastMerged = -1L
-    val schema = Tables.parquetSchema(s, feedDir)
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).parquet(feedDir)
-    val q = feed.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (id > lastMerged && !batch.isEmpty) {
-          val part = batch
-            .agg(graft.expressions.GramMatrix.gram(col("embedding"), d))
-            .head.getSeq[Double](0)
-          var i = 0
-          while (i < acc.length) { acc(i) += part(i); i += 1 }
-          lastMerged = id
-        }
-        ()
+    runFeed(s, dir, "gram_stream") { (batch, id) =>
+      if (id > lastMerged && !batch.isEmpty) {
+        val part = batch
+          .agg(graft.expressions.GramMatrix.gram(col("embedding"), d))
+          .head.getSeq[Double](0)
+        var i = 0
+        while (i < acc.length) { acc(i) += part(i); i += 1 }
+        lastMerged = id
       }
-      .option("checkpointLocation", freshDir(s"$root/ckpt"))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    }
     graft.ops.SimilarityOps.pcaProjectFromStats(s, dir, acc)
   }
 
@@ -1204,46 +1167,15 @@ object Sessionize extends OpGroup {
     * before the exchange).
     */
   def streamingTopKMaintain(s: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      val root = layerPath(dir, "topk_stream")
-      val feedDir = feedFor(s, dir, "topk_stream")
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("counts_"))
-        .foreach(f => freshDir(f.getPath))
-      val gens = new GenLedger
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            val part = batch
-              .select(explode(graft.functions.TextFns.tokens(col("text")))
-                .as("token"))
-              .groupBy(col("token")).agg(count(lit(1)).as("b_n"))
-            val next = gens.predecessor(id) match {
-              case None => part.select(col("token"), col("b_n").as("n"))
-              case Some(p) =>
-                val run = Tables.parquet(s, p)
-                run.join(part, run("token") === part("token"), "full_outer")
-                  .select(
-                    coalesce(run("token"), part("token")).as("token"),
-                    (coalesce(col("n"), lit(0L)) +
-                      coalesce(col("b_n"), lit(0L))).as("n"))
-            }
-            val nextPath = s"$root/counts_$id"
-            next.coalesce(1).write.mode("overwrite").parquet(nextPath)
-            gens.record(id, nextPath)
-          }
-          ()
-        }
-        .option("checkpointLocation", freshDir(s"$root/ckpt"))
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      Tables.parquet(s, gens.latest)
-        .orderBy(col("n").desc, col("token").asc)
+    maintain(s, dir, "topk_stream", "counts_") { batch =>
+      batch.select(explode(graft.functions.TextFns.tokens(col("text")))
+          .as("token"))
+        .groupBy(col("token")).agg(count(lit(1)).as("n"))
+    } { (run, part) =>
+      run.join(part, Seq("token"), "full_outer")
+        .select(col("token"), added(run, part, "n").as("n"))
+    } { latest =>
+      latest.get.orderBy(col("n").desc, col("token").asc)
         .limit(graft.ops.TextOps.topTokenK)
     }
 
@@ -1268,54 +1200,20 @@ object Sessionize extends OpGroup {
     * merge chain always extends the latest predecessor.
     */
   def streamingAbMaintain(s: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      val root = layerPath(dir, "ab_stream")
-      val feedDir = feedFor(s, dir, "ab_stream")
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("users_"))
-        .foreach(f => freshDir(f.getPath))
-      val gens = new GenLedger
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            val part = graft.ops.AnalyticsOps.abUserPartial(batch.toDF())
-              .select(col("user_id").as("b_user"), col("conv").as("b_conv"),
-                col("cents").as("b_cents"))
-            val next = gens.predecessor(id) match {
-              case None => part.select(col("b_user").as("user_id"),
-                col("b_conv").as("conv"), col("b_cents").as("cents"))
-              case Some(p) =>
-                val run = Tables.parquet(s, p)
-                run.join(part, run("user_id") === part("b_user"),
-                    "full_outer")
-                  .select(
-                    coalesce(run("user_id"), part("b_user")).as("user_id"),
-                    greatest(coalesce(col("conv"), lit(0L)),
-                      coalesce(col("b_conv"), lit(0L))).as("conv"),
-                    (coalesce(col("cents"), lit(0L)) +
-                      coalesce(col("b_cents"), lit(0L))).as("cents"))
-            }
-            val nextPath = s"$root/users_$id"
-            next.coalesce(1).write.mode("overwrite").parquet(nextPath)
-            gens.record(id, nextPath)
-          }
-          ()
-        }
-        .option("checkpointLocation", freshDir(s"$root/ckpt"))
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    maintain(s, dir, "ab_stream", "users_") { batch =>
+      graft.ops.AnalyticsOps.abUserPartial(batch)
+        .select(col("user_id"), col("conv"), col("cents"))
+    } { (run, part) =>
+      run.join(part, Seq("user_id"), "full_outer").select(col("user_id"),
+        greatest(coalesce(run("conv"), lit(0L)),
+          coalesce(part("conv"), lit(0L))).as("conv"),
+        added(run, part, "cents").as("cents"))
+    } { latest =>
       // an all-empty feed leaves no generation: read out from an empty
-      // support (NULL z, zero arms) instead of throwing on gens.latest —
-      // the streamingCdcApply latestOption discipline
-      graft.ops.AnalyticsOps.abReadout(gens.latestOption
-        .map(Tables.parquet(s, _))
-        .getOrElse(s.range(0).select(col("id").as("user_id"),
-          col("id").as("conv"), col("id").as("cents"))))
+      // support (NULL z, zero arms) instead of throwing
+      graft.ops.AnalyticsOps.abReadout(latest.getOrElse(
+        s.range(0).select(col("id").as("user_id"), col("id").as("conv"),
+          col("id").as("cents"))))
     }
 
   /** Incremental ANN-INDEX maintenance — the missing member of the IVM
@@ -1334,41 +1232,29 @@ object Sessionize extends OpGroup {
     * fixpoint discipline of the other `*_maintain` ops.
     *
     * foreachBatch is at-least-once: a replayed batch overwrites its own
-    * `postings_$id` dir (idempotent per batch id) and the path-set guard
-    * keeps the read-side union duplicate-free. What this op does NOT
-    * maintain is the quantizer itself — a re-cluster generation pays one
-    * linear assignment pass by construction; the quantizer's TRAINING
+    * `postings_$id` dir (idempotent per batch id) and its [[GenLedger]]
+    * entry, so the read-side union stays duplicate-free. What this op
+    * does NOT maintain is the quantizer itself — a re-cluster generation
+    * pays one linear assignment pass by construction; the quantizer's TRAINING
     * stats (per-cell integer sums/counts) are abelian-group aggregates
     * maintainable exactly like [[streamingGramMaintain]]'s Gram buffer.
     */
   def streamingIvfMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Warehouse.layerPath
     val root = layerPath(dir, "ivf_stream")
-    val feedDir = feedFor(s, dir, "ivf_stream")
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("postings_"))
-      .foreach(f => freshDir(f.getPath))
+    wipeGens(root, "postings_")
     val model = graft.ops.SimilarityOps.ivfModel(s, dir)
-    var postings = List.empty[String]
-    val schema = Tables.parquetSchema(s, feedDir)
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).parquet(feedDir)
-    val q = feed.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val path = s"$root/postings_$id"
-          graft.ops.SimilarityOps.probeWithModel(batch.toDF(), model)
-            .write.mode("overwrite").parquet(path)
-          if (!postings.contains(path)) postings ::= path
-        }
-        ()
+    val postings = new GenLedger[Gen]
+    runFeed(s, dir, "ivf_stream") { (batch, id) =>
+      if (!batch.isEmpty) {
+        val path = s"$root/postings_$id"
+        val probed = graft.ops.SimilarityOps.probeWithModel(batch, model)
+        probed.write.mode("overwrite").parquet(path)
+        postings.record(id, Gen(path, probed.schema))
       }
-      .option("checkpointLocation", freshDir(s"$root/ckpt"))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    }
+    val all = postings.all
     graft.ops.SimilarityOps.ivfTopkFromCells(
-      Tables.parquet(s, postings.reverse: _*))
+      s.read.schema(all.head.schema).parquet(all.map(_.path): _*))
   }
 
   /** Incremental MONITORING-statistic maintenance — the IVM family's
@@ -1385,51 +1271,13 @@ object Sessionize extends OpGroup {
     * batch [[graft.ops.TimeSeriesOps.changepoint]] oracle.
     */
   def streamingCusumMaintain(s: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(s, noAqe) {
-      import graft.sources.Warehouse.layerPath
-      val root = layerPath(dir, "cusum_stream")
-      val feedDir = feedFor(s, dir, "cusum_stream")
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("counts_"))
-        .foreach(f => freshDir(f.getPath))
-      val gens = new GenLedger
-      val schema = Tables.parquetSchema(s, feedDir)
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(feedDir)
-      val q = feed.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            val part = batch
-              .groupBy(col("event_type").as("b_type"),
-                to_date(col("ts")).as("b_day"))
-              .agg(count(lit(1)).as("b_x"))
-            val next = gens.predecessor(id) match {
-              case None => part.select(col("b_type").as("event_type"),
-                col("b_day").as("day"), col("b_x").as("x"))
-              case Some(p) =>
-                val run = Tables.parquet(s, p)
-                run.join(part,
-                  run("event_type") === part("b_type") &&
-                    run("day") === part("b_day"), "full_outer")
-                  .select(
-                    coalesce(run("event_type"), part("b_type"))
-                      .as("event_type"),
-                    coalesce(run("day"), part("b_day")).as("day"),
-                    (coalesce(col("x"), lit(0L)) +
-                      coalesce(col("b_x"), lit(0L))).as("x"))
-            }
-            val nextPath = s"$root/counts_$id"
-            next.coalesce(1).write.mode("overwrite").parquet(nextPath)
-            gens.record(id, nextPath)
-          }
-          ()
-        }
-        .option("checkpointLocation", freshDir(s"$root/ckpt"))
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      graft.ops.TimeSeriesOps.cusumOver(Tables.parquet(s, gens.latest))
-    }
+    maintain(s, dir, "cusum_stream", "counts_") { batch =>
+      batch.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+        .agg(count(lit(1)).as("x"))
+    } { (run, part) =>
+      run.join(part, Seq("event_type", "day"), "full_outer")
+        .select(col("event_type"), col("day"), added(run, part, "x").as("x"))
+    } { latest => graft.ops.TimeSeriesOps.cusumOver(latest.get) }
 
   private val streamingTopKMaintainSql =
     s"""SELECT token, COUNT(*) AS n

@@ -3482,9 +3482,9 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(!dirs.contains("v0") && !dirs.contains("v1"),
       s"expired dirs still present: $dirs")
     assert(dirs.contains("v2") && dirs.contains("d3") &&
-      dirs.contains("_manifest"), s"retained dirs missing: $dirs")
+      dirs.contains("manifest"), s"retained dirs missing: $dirs")
     // the republished manifest holds only retained versions
-    val vs = spark.read.parquet(s"${root.getPath}/_manifest")
+    val vs = spark.read.parquet(s"${root.getPath}/manifest")
       .select("version").collect().map(_.getInt(0)).toSet
     assert(vs == Set(2, 3), s"manifest versions: $vs")
   }
@@ -3542,7 +3542,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // the at-least-once property the maintains rely on: a batch's merge
     // input is its PREDECESSOR generation, and recording the batch's own
     // output does not change what a replay of that batch would read
-    val g = new Sessionize.GenLedger
+    val g = new Sessionize.GenLedger[String]
     assert(g.predecessor(0L).isEmpty && g.latestOption.isEmpty)
     g.record(0L, "gen0")
     assert(g.predecessor(0L).isEmpty, "batch 0 replay must re-seed, not self-read")
@@ -3550,11 +3550,61 @@ class ExtensionsSpec extends AnyFunSuite {
     g.record(1L, "gen1")
     assert(g.predecessor(1L).contains("gen0"),
       "batch 1 replay must merge from gen0 again, not from its own gen1")
-    assert(g.predecessor(2L).contains("gen1") && g.latest == "gen1")
+    assert(g.predecessor(2L).contains("gen1") && g.latestOption.contains("gen1"))
     // a replayed record overwrites in place — the ledger never grows a
     // duplicate generation for the same batch id
     g.record(1L, "gen1")
-    assert(g.latest == "gen1" && g.predecessor(2L).contains("gen1"))
+    assert(g.latestOption.contains("gen1") && g.predecessor(2L).contains("gen1"))
+    assert(g.all == Seq("gen0", "gen1"))
+  }
+
+  test("maintain's per-batch step: a replayed batch id changes nothing") {
+    // foreachBatch is at-least-once: applying a batch id again must leave
+    // the same generations and the same latest rows as applying it once
+    import spark.implicits._
+    type F = org.apache.spark.sql.DataFrame
+    val partial = (b: F) => b.groupBy(col("k")).agg(count(lit(1)).as("n"))
+    val merge = (run: F, part: F) =>
+      run.join(part, Seq("k"), "full_outer").select(col("k"),
+        (coalesce(run("n"), lit(0L)) + coalesce(part("n"), lit(0L))).as("n"))
+    val (b0, b1) = (Seq(1L, 2L, 2L).toDF("k"), Seq(2L, 3L).toDF("k"))
+    def fold(batches: (F, Long)*): (Set[(Long, Long)], Int) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_gens").toFile
+      val gens = new Sessionize.GenLedger[Sessionize.Gen]
+      batches.foreach { case (b, id) =>
+        Sessionize.maintainStep(gens, s"$root/gen_", partial, merge)(b, id)
+      }
+      val rows = gens.latestOption.get.read(spark).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      (rows, root.listFiles().count(_.getName.startsWith("gen_")))
+    }
+    val once = fold(b0 -> 0L, b1 -> 1L)
+    assert(once == ((Set((1L, 1L), (2L, 3L), (3L, 1L)), 2)), s"$once")
+    assert(fold(b0 -> 0L, b0 -> 0L, b1 -> 1L, b1 -> 1L) == once)
+    // an empty micro-batch writes no generation
+    assert(fold(b0 -> 0L, b1 -> 1L, b1.limit(0) -> 2L) == once)
+  }
+
+  test("a warm maintain or vacuum call infers no parquet schema") {
+    // every generation, view, postings and version dir these ops read
+    // back was written in the same call, so the read passes the writer's
+    // schema instead of inferring it from a new footer
+    val ops: Seq[(org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame] = Seq(
+      Sessionize.streamingCdcApply, Sessionize.streamingAggMaintain,
+      Sessionize.streamingManifestMaintain, Sessionize.streamingTopKMaintain,
+      Sessionize.streamingAbMaintain, Sessionize.streamingCusumMaintain,
+      Sessionize.streamingJoinMaintain, Sessionize.streamingIvfMaintain,
+      Warehouse.vacuum)
+    def pass(): Unit = ops.foreach(op =>
+      op(spark, dir).write.format("noop").mode("overwrite").save())
+    pass()
+    val (live, inferred) =
+      (graft.ops.Memo.schemaCount, graft.ops.Memo.schemaInferences)
+    pass()
+    assert(graft.ops.Memo.schemaInferences == inferred,
+      s"${graft.ops.Memo.schemaInferences - inferred} schemas inferred")
+    assert(graft.ops.Memo.schemaCount == live)
   }
 
   test("cusum maintenance equals the batch changepoint and really merged") {

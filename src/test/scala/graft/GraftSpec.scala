@@ -447,6 +447,16 @@ class GraftSpec extends AnyFunSuite {
       s"SparkSession.builder call sites outside Conf.localSession: $found")
   }
 
+  test("one micro-batch harness: only Sessionize.runFeed calls foreachBatch") {
+    // Every feed-driven maintain runs its micro-batches through
+    // Sessionize.runFeed (the merge-shaped ones through maintain on top
+    // of it), so the feed options, the wiped checkpoint and the drain
+    // cannot drift between copies again.
+    val found = codeSites(java.util.regex.Pattern.compile("\\.foreachBatch\\b"))
+    assert(found == Map("streaming/Sessionize.scala" -> 1),
+      s"foreachBatch call sites outside Sessionize.runFeed: $found")
+  }
+
   test("one artifact store: only Memo.scala creates a ConcurrentHashMap") {
     // Per-session artifacts live in ops.Memo (session-scoped keys, one
     // build per key, bounded retention); a hand-rolled map elsewhere
