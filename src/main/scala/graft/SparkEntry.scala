@@ -31,22 +31,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.aggPerAdmission(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * Each function drains the [[graft.ops.Scratch]] registry on entry:
-    * queries run sequentially in every driver path, so the PREVIOUS
-    * query's per-invocation localCheckpoint scratch is dead by now and
-    * its block-manager storage is released deterministically instead of
-    * waiting for a driver GC (bounds checkpoint storage to one query's
-    * worth across a 228-query bench run).
-    */
+  /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allOps.map { o =>
-      o.name -> { (s: SparkSession, dir: String) =>
-        graft.ops.Scratch.drain()
-        o.fn(s, dir)
-      }
-    }.toMap
+    allOps.map(o => o.name -> o.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

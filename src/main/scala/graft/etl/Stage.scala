@@ -63,8 +63,8 @@ object Stage {
     * the numbering is identical to `ROW_NUMBER() OVER (ORDER BY
     * provider_id)` and the DuckDB oracle is unchanged; the INT cast
     * mirrors the oracle's `CAST(.. AS INT)` (the reference's INT
-    * AUTO_INCREMENT-style key). Cached — the checkpoint + numbering runs
-    * once per (session, dir).
+    * AUTO_INCREMENT-style key). Cached — the sort + numbering runs once
+    * per (session, dir).
     */
   def dimProvider(s: SparkSession, dir: String): DataFrame =
     graft.ops.Memo.of(s, dir, "dimProvider")(
@@ -74,10 +74,7 @@ object Stage {
             col("user_id").as("patient_id"),
             col("ts").as("intime"),
             (col("ts") + expr("INTERVAL 2 DAY")).as("outtime")),
-        "provider_key", Seq(col("provider_id").asc),
-        // the Memo-cached result must survive cache eviction, so its
-        // internal checkpoint is NOT boundary-tracked (Scratch doc)
-        trackScratch = false)
+        "provider_key", Seq(col("provider_id").asc))
         .withColumn("provider_key", col("provider_key").cast("int"))
         .cache())
 

@@ -266,32 +266,41 @@ object DedupOps extends OpGroup {
   private[graft] def docCount(s: SparkSession, dir: String): Long =
     Memo.of(s, dir, "dedupDocCount")(docs(s, dir).count())
 
+  /** The report's shingle sample: the corpus-capped universe's rows
+    * whose doc_id is a multiple of the budget's modulus. Memoized per
+    * (session, dir, budget) and materialized at build: groups, sizes and
+    * the gate reference it from four plan branches, and without a
+    * materialized sample each branch re-scans the FULL corpus-capped
+    * universe to re-apply the 1/mod filter (measured r13: 4 stages ×
+    * ~10 task-sec re-reading the multi-million-row cache to emit a
+    * ~30k-row sample). At 100 TB the sample is budget-bounded while the
+    * universe is corpus-sized — the re-scan is exactly the cost class
+    * the budget exists to avoid. Sized by `Parts` from the budget: the
+    * sample is budget-bounded BY CONTRACT (≤ budget docs × ~52 shingle
+    * rows × ~30 B at every scale factor — the modulus grows with the
+    * corpus), so inheriting the universe's partitioning would give every
+    * downstream sample scan one task per universe partition. A full
+    * repartition (not coalesce) keeps the universe-side filter scan at
+    * the universe's own parallelism.
+    */
+  private[graft] def qualitySample(s: SparkSession, dir: String,
+      budget: Long): DataFrame =
+    Memo.of(s, dir, s"dedupQualitySample.$budget") {
+      val mod = qualitySampleModFor(docCount(s, dir), budget)
+      val sample = Parts.sized(
+        cappedShingleRows(s, dir).filter(col("doc_id") % mod === 0L),
+        budget * 1600L).cache()
+      sample.count()
+      sample
+    }
+
   private def qualityReportAt(budget: Long)(
       s: SparkSession, dir: String): DataFrame = {
     val mod = qualitySampleModFor(docCount(s, dir), budget)
     // Sample FROM the corpus-capped universe: no second (sample-df)
     // cap — the corpus cap already bounds every group at ≤ cap docs,
-    // and it is the definition the capped curve shares. Materialized per
-    // execution (eager localCheckpoint): groups/sizes/the gate reference
-    // the sample from four plan branches, and without truncation each
-    // branch re-scans the FULL corpus-capped universe to re-apply the
-    // 1/mod filter (measured r13: 4 stages × ~10 task-sec re-reading the
-    // multi-million-row cache to emit a ~30k-row sample; 48 → ~12
-    // task-sec with the checkpoint). At 100 TB the sample is
-    // budget-bounded while the universe is corpus-sized — the re-scan is
-    // exactly the cost class the budget exists to avoid.
-    // repartitioned for materialization (Parts): the sample is
-    // budget-bounded BY CONTRACT (≤ budget docs × ~52 shingle rows ×
-    // ~30 B at every scale factor — the modulus grows with the corpus),
-    // so its checkpoint is always a handful of MB; inheriting the
-    // capped universe's partitioning instead gave every one of the 4-5
-    // downstream sample scans one task per universe partition. A full
-    // repartition (not coalesce) keeps the universe-side filter scan at
-    // the universe's own parallelism.
-    val sample = Scratch.track(cappedShingleRows(s, dir)
-      .filter(col("doc_id") % mod === 0L)
-      .repartition(Parts.forBytes(budget * 1600L))
-      .localCheckpoint())
+    // and it is the definition the capped curve shares.
+    val sample = qualitySample(s, dir, budget)
     val groups = sample.groupBy(col("x"))
       .agg(collect_list(col("doc_id")).as("ds"))
     val sizes = sample.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -618,10 +627,6 @@ object DedupOps extends OpGroup {
   // ---------------------------------------------------------------------
   val substringK = 8
 
-  /** The span report over ANY (doc_id, text) frame — exposed for the
-    * constructed-corpus spec (planted copied passages must surface with
-    * exact span bounds).
-    */
   /** Exploded (doc_id, pos, tok) rows — the shared token base. */
   private def tokenRows(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
@@ -630,7 +635,7 @@ object DedupOps extends OpGroup {
   /** All k-gram occurrences (doc_id, pos, h): k−1 LEADs over one
     * doc-partitioned window assemble the gram, one md5 hashes it.
     */
-  private def kgramRows(d: DataFrame): DataFrame = {
+  private[graft] def kgramRows(d: DataFrame): DataFrame = {
     val wLead = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val leadCols = (1 until substringK)
       .map(i => lead(col("tok"), i).over(wLead).as(s"_t$i"))
@@ -643,22 +648,41 @@ object DedupOps extends OpGroup {
           .as("h"))
   }
 
-  /** k-gram occurrences whose hash repeats anywhere in the corpus.
-    * kg is materialized once per execution (eager localCheckpoint): it
-    * feeds both the repeat-hash aggregate and the join probe, and
-    * without truncation each branch re-runs the tokenize → posexplode →
-    * k-lead window → md5 pipeline over the whole corpus (2 full passes
-    * measured at sf0.1; at 100 TB this is the dominant scan).
+  /** The corpus k-gram table: [[kgramRows]] over `documents`, built once
+    * per (session, dir) and read by both ExactSubstr ops — the span
+    * report's repeat-hash aggregate and join probe, and the cut's three
+    * ownership probes. Left lazy, each probe re-ran the tokenize →
+    * posexplode → k-lead window → md5 pipeline over the whole corpus
+    * (measured r13: three identical scan+window stage pairs at sf0.1; at
+    * 100 TB this is the dominant scan). Sized by `Parts`: a row (two
+    * longs + a 32-char hash) per token is ~16× its share of the
+    * compressed text, and its consumers are a partial aggregate and
+    * join probes — forwarding work.
     */
-  private def dupOccurrences(d: DataFrame): DataFrame = {
-    val kg = Scratch.track(kgramRows(d).localCheckpoint())
+  private[graft] def kgrams(s: SparkSession, dir: String): DataFrame =
+    Memo.of(s, dir, "substringKgrams") {
+      val kg = Parts.sized(
+        kgramRows(docs(s, dir).select(col("doc_id"), col("text"))),
+        Parts.sourceBytes(s, dir, "documents") * 16).cache()
+      kg.count()
+      kg
+    }
+
+  /** k-gram occurrences of `kg` whose hash repeats anywhere in it. */
+  private def dupOccurrences(kg: DataFrame): DataFrame = {
     val duph = kg.groupBy(col("h")).agg(count(lit(1)).as("_n"))
       .filter(col("_n") > 1).drop("_n")
     kg.join(duph, Seq("h"))
   }
 
-  private[graft] def substringSpansOver(d: DataFrame): DataFrame = {
-    val dp = dupOccurrences(d).select(col("doc_id"), col("pos"))
+  /** The span report of the (doc_id, text) frame `d`, whose k-gram
+    * occurrences are `kg` ([[kgramRows]] of `d`) — exposed for the
+    * constructed-corpus spec (planted copied passages must surface with
+    * exact span bounds).
+    */
+  private[graft] def substringSpansOver(d: DataFrame,
+      kg: DataFrame): DataFrame = {
+    val dp = dupOccurrences(kg).select(col("doc_id"), col("pos"))
     // gaps-and-islands: a k-gram start extends the current span iff it
     // begins before the running max span end; islands number by the
     // running count of fresh starts
@@ -687,7 +711,8 @@ object DedupOps extends OpGroup {
   }
 
   def substringSpans(s: SparkSession, dir: String): DataFrame =
-    substringSpansOver(docs(s, dir).select(col("doc_id"), col("text")))
+    substringSpansOver(docs(s, dir).select(col("doc_id"), col("text")),
+      kgrams(s, dir))
 
   private val substringSpansSql =
     s"""WITH w AS (
@@ -750,7 +775,8 @@ object DedupOps extends OpGroup {
   // — no new corpus-wide surface beyond the one hash shuffle the report
   // already pays.
   // ---------------------------------------------------------------------
-  private[graft] def substringApplyOver(d: DataFrame): DataFrame = {
+  private[graft] def substringApplyOver(d: DataFrame,
+      kg: DataFrame): DataFrame = {
     // Canonical ownership without a rank window: the former
     // row_number().over(Window.partitionBy("h")) serialized EVERY
     // occurrence of one hash into a single window task — a boilerplate
@@ -763,11 +789,8 @@ object DedupOps extends OpGroup {
     // longs, so both stay HashAggregates with map-side partials — the
     // hot key collapses to one row per mapper before any shuffle — and
     // every consumer shares the single hash-partitioned exchange on h.
-    // Materialized once per execution (eager localCheckpoint): ownDoc,
-    // ownPos and occ all probe kg, and without truncation the corpus
-    // tokenize → k-lead window → md5 pipeline ran 3× (measured r13:
-    // three identical scan+window stage pairs at sf0.1).
-    val kg = Scratch.track(kgramRows(d).localCheckpoint())
+    // ownDoc, ownPos and occ all probe kg, the corpus k-gram table
+    // ([[kgrams]]) that the span report reads too.
     // (r13 note: a two-level (h, doc_id) → h struct-min aggregation was
     // A/B'd here to drop the join-back pass; it shuffled MORE — the
     // (h, doc)-grain partial doesn't collapse hot hashes map-side the
@@ -817,7 +840,8 @@ object DedupOps extends OpGroup {
   }
 
   def substringApply(s: SparkSession, dir: String): DataFrame =
-    substringApplyOver(docs(s, dir).select(col("doc_id"), col("text")))
+    substringApplyOver(docs(s, dir).select(col("doc_id"), col("text")),
+      kgrams(s, dir))
 
   private val substringApplySql =
     s"""WITH w AS (
@@ -903,12 +927,11 @@ object DedupOps extends OpGroup {
   // map-side-combinable min-agg + one join over the CURRENT edge set —
   // and that edge set SHRINKS as components contract toward stars, so
   // convergence is O(log) phases in component SIZE with falling
-  // per-phase volume. Min-label propagation (kept behind the useStar
-  // flag for the differential property) replays the FULL edge list
-  // every round and converges in rounds bounded by component diameter
-  // (log-diameter with pointer jumping) — on the skewed mega-component
-  // a real 100 TB corpus always has, contraction's shrinking volume is
-  // the difference between a bounded build and a straggler chain.
+  // per-phase volume. Min-label propagation replays the FULL edge list
+  // every round and converges in rounds bounded by component diameter —
+  // on the skewed mega-component a real 100 TB corpus always has,
+  // contraction's shrinking volume is the difference between a bounded
+  // build and a straggler chain.
   // ---------------------------------------------------------------------
   val jaccardThreshold = 0.8
 
@@ -917,13 +940,9 @@ object DedupOps extends OpGroup {
     * touches an edge, where cluster_id = the component's minimum node id.
     * Standalone graph operator — [[dedupClusters]] applies it to the
     * verified near-dup pair graph, but any id-pair relation works.
-    * `useStar = false` selects the legacy min-label + pointer-jumping
-    * path, kept so the property suite can replay both on the same graphs.
     */
-  def connectedComponents(edges: DataFrame,
-      useStar: Boolean = true): DataFrame =
-    if (useStar) starContraction(edges)._1
-    else labelPropagation(edges)
+  def connectedComponents(edges: DataFrame): DataFrame =
+    starContraction(edges)._1
 
   /** Large-star/small-star contraction core; returns the label table and
     * the number of (large∘small) phases it took — the phase count is
@@ -937,27 +956,30 @@ object DedupOps extends OpGroup {
     * drop, and the fixpoint is a forest of stars rooted at component
     * minima — at which point the edge list IS the label table.
     *
-    * Hybrid finish: once the (distinct, contracted) edge set fits one
-    * task (`localThreshold` edges ≈ 32 MB at 2M), the remaining
-    * components resolve in a single-task union-find pass — iterative
-    * distributed rounds on a driver-scale graph pay ~8 stage waves per
-    * phase for data one core folds in milliseconds. At 100 TB the star
-    * phases do the contracting (each phase shrinks the edge set by
-    * merging parallel edges into star edges) until the remainder
-    * crosses the threshold; at bench scale the input usually starts
-    * below it and the whole operator is one narrow pass. Exact either
+    * Hybrid finish: once the edge set fits one task (`localThreshold`
+    * edges ≈ 32 MB at 2M), the remaining components resolve in a
+    * single-task union-find pass — iterative distributed rounds on a
+    * driver-scale graph pay ~8 stage waves per phase for data one core
+    * folds in milliseconds. The input edges are persisted and counted
+    * first (their lineage runs once per call), and an input at or below
+    * the threshold goes straight to that pass — the bench-scale case,
+    * one narrow stage. At 100 TB the star phases do the contracting
+    * (each phase shrinks the edge set by merging parallel edges into
+    * star edges) until the remainder crosses the threshold. Exact either
     * way — union-find and star fixpoints both label by component min.
     */
   private[graft] def starContraction(edges: DataFrame,
       localThreshold: Long = 2000000L): (DataFrame, Int) = {
-    val nodes = edges.select(col("doc_a").as("id"))
-      .unionByName(edges.select(col("doc_b").as("id"))).distinct()
-      .localCheckpoint()
-    var p = edges
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
+    val (in, inRows) = Parts.persisted(
+      edges.select(col("doc_a").as("u"), col("doc_b").as("v")))
+    if (inRows.count() <= localThreshold)
+      return (unionFind(in).toDF("doc_id", "cluster_id"), 0)
+    val nodes = in.select(col("u").as("id"))
+      .unionByName(in.select(col("v").as("id"))).distinct()
+    var (p, pRows) = Parts.persisted(in
+      .select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v"))
+      .filter(col("u") =!= col("v")).distinct())
     // Per-phase convergence probe in ONE action: row count + an
     // order-independent XOR-of-hashes digest of the (distinct) edge
     // set. Equal digests GATE the exact exceptAll confirmation — a
@@ -984,69 +1006,41 @@ object DedupOps extends OpGroup {
         .select(col("u"), least(col("u"), col("mnv")).as("mn"))
       // No distinct here: duplicate (u, mn) rows are absorbed by the
       // small-star min-agg (map-side) and the phase-final distinct —
-      // cheaper than an extra shuffle. Checkpoints are LAZY so each
-      // phase materializes at its single count action instead of
-      // paying three sequential job barriers.
-      val large = sym.filter(col("v") > col("u"))
-        .join(mins, Seq("u"))
-        .select(col("v").as("u"), col("mn").as("v"))
-        .filter(col("u") =!= col("v"))
-        .localCheckpoint(eager = false)
+      // cheaper than an extra shuffle. Both phase frames fill their
+      // blocks at the phase's single digest action.
+      val (large, largeRows) = Parts.persisted(
+        sym.filter(col("v") > col("u"))
+          .join(mins, Seq("u"))
+          .select(col("v").as("u"), col("mn").as("v"))
+          .filter(col("u") =!= col("v")))
       // small-star over the ≤-neighborhood — exactly the out-edges of
       // the canonical rep: u and its smaller neighbors all link to the
       // smallest of them.
       val minsS = large.groupBy("u").agg(min(col("v")).as("mn"))
-      val small = large.join(minsS, Seq("u"))
-        .select(col("v").as("u"), col("mn").as("v"))
-        .unionByName(minsS.select(col("u"), col("mn").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(eager = false)
+      val (small, smallRows) = Parts.persisted(
+        large.join(minsS, Seq("u"))
+          .select(col("v").as("u"), col("mn").as("v"))
+          .unionByName(minsS.select(col("u"), col("mn").as("v")))
+          .filter(col("u") =!= col("v")).distinct())
       // Fixpoint ⇔ the phase was an identity map on a distinct edge
       // set: equal (count, digest) gates the exact one-sided except,
       // which with equal counts proves set equality.
       val sSig = digest(small)
       converged = sSig == pSig && small.exceptAll(p).isEmpty
-      // small's checkpoint is materialized (the digest action) and the
-      // convergence probe has read the old p for the last time: release
-      // the superseded phase's blocks (and the intermediate large-star
-      // checkpoint) now — per-phase storage stays O(1) edge frames.
-      // (RDD-level release: Dataset.unpersist can't see checkpoint
-      // blocks — GraftSqlBridge.releaseCheckpoint scaladoc.)
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(p)
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(large)
-      p = small; pSig = sSig
+      // small is materialized and the convergence probe has read the
+      // old p for the last time: unpersist the superseded phase (and
+      // the large-star edges) so per-phase storage stays O(1) edge
+      // frames. Their lineage stays, so a lost block of small still
+      // recomputes.
+      pRows.unpersist(blocking = false)
+      largeRows.unpersist(blocking = false)
+      p = small; pRows = smallRows; pSig = sSig
       phases += 1
     }
     if (!converged) {
       require(pSig._1 <= localThreshold,
         s"star contraction did not converge in $phases phases")
-      // single-task union-find finish over the contracted remainder:
-      // deterministic (component-min roots are order-independent), one
-      // narrow stage, ≤ localThreshold·16B of state.
-      val spark = p.sparkSession
-      import spark.implicits._
-      p = p.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)].coalesce(1)
-        .mapPartitions { it =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x
-            while (parent.getOrElse(c, c) != r) {
-              val nxt = parent(c); parent(c) = r; c = nxt
-            }
-            r
-          }
-          val seen = scala.collection.mutable.LongMap.empty[Unit]
-          it.foreach { case (a, b) =>
-            seen(a) = (); seen(b) = ()
-            val (ra, rb) = (find(a), find(b))
-            if (ra < rb) parent(rb) = ra
-            else if (rb < ra) parent(ra) = rb
-          }
-          seen.keysIterator.map(n => (n, find(n)))
-        }.toDF("u", "v")
+      p = unionFind(p)
     }
     // At fixpoint every edge is (node → component min); nodes that kept
     // their own id (roots, self-loop-only nodes) re-enter via the
@@ -1058,80 +1052,41 @@ object DedupOps extends OpGroup {
     (labels, phases)
   }
 
-  private[graft] def labelPropagation(edges: DataFrame): DataFrame = {
-    // Verified pairs: computed once, reread per round. Hash-partitioned
-    // on the per-round join key BEFORE the checkpoint (localCheckpoint
-    // preserves outputPartitioning), so each propagation round reuses the
-    // edge side's partitioning instead of rebuilding its exchange — one
-    // upfront edge shuffle buys every round. Measured on er_resolve at
-    // sf0.1 (564k-edge graph, ~12 rounds): 12.4 → 8.1 executor-task sec.
-    // The remaining per-round volume is the O(E) candidate-label flow
-    // into the min-agg — the inherent cost of min-label propagation.
-    val sym = edges.unionByName(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .repartition(col("doc_b"))
-      .localCheckpoint()
-    // Only nodes that touch an edge can change label; everything else
-    // keeps its own id and is unioned back by the caller.
-    var labels = sym.select(col("doc_a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint()
-    // sum() over zero rows is NULL — a clean corpus (no verified pair)
-    // must yield the empty label table, not an NPE.
-    def labelSum(): Long = {
-      val r = labels.agg(sum(col("cluster_id"))).head
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    var prevSum = labelSum()
-    var converged = labels.isEmpty
-    var rounds = 0
-    while (!converged && rounds < 64) {
-      // One join + one agg per round: candidate labels = self label ∪
-      // neighbor labels, then min per node. (A second join to merge the
-      // neighbor-min back into the label table would cost an extra
-      // shuffle per round for nothing — the union already carries self.)
-      val propagated = sym
-        .join(labels.select(col("doc_id").as("doc_b"),
-          col("cluster_id").as("lab")), Seq("doc_b"))
-        .select(col("doc_a").as("doc_id"), col("lab"))
-        .unionByName(labels.select(col("doc_id"), col("cluster_id").as("lab")))
-        .groupBy(col("doc_id"))
-        .agg(min(col("lab")).as("cluster_id"))
-      // Pointer-jumping shortcut: label(x) <- label(label(x)). One extra
-      // self-join per round turns diameter-bounded convergence into
-      // log(diameter)-bounded — a 10^9-long duplicate chain still
-      // converges within ~30 rounds, so the 64-round cap is structural
-      // headroom, not a corpus assumption.
-      val prev = labels
-      labels = propagated.alias("c")
-        .join(propagated.select(col("doc_id").as("cluster_id"),
-          col("cluster_id").as("parent")).alias("p"),
-          Seq("cluster_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("parent"), col("cluster_id")).as("cluster_id"))
-        .localCheckpoint()
-      // The new round's eager checkpoint is materialized — the previous
-      // round's label blocks are dead; release them instead of holding
-      // every round's frame until a driver GC. (RDD-level release:
-      // Dataset.unpersist can't see checkpoint blocks.)
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(prev)
-      // Labels only ever decrease, so an unchanged sum means fixpoint.
-      val s2 = labelSum()
-      converged = s2 == prevSum
-      prevSum = s2
-      rounds += 1
-    }
-    require(converged, s"label propagation did not converge in $rounds rounds")
-    // The returned final-round checkpoint may back a Memo-cached cluster
-    // table (recompute on cache eviction re-reads it), so it is NOT
-    // boundary-tracked; sym fed only the now-materialized rounds.
-    org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(sym)
-    labels
+  /** Single-task union-find over the edges `(u, v)`: one `(u, v)` row per
+    * node that touches an edge, v = its component's minimum id —
+    * deterministic (component-min roots are order-independent), one
+    * narrow stage, state linear in the edge count.
+    */
+  private def unionFind(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.select(col("u").cast("long"), col("v").cast("long"))
+      .as[(Long, Long)].coalesce(1)
+      .mapPartitions { it =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x
+          while (parent.getOrElse(c, c) != r) {
+            val nxt = parent(c); parent(c) = r; c = nxt
+          }
+          r
+        }
+        val seen = scala.collection.mutable.LongMap.empty[Unit]
+        it.foreach { case (a, b) =>
+          seen(a) = (); seen(b) = ()
+          val (ra, rb) = (find(a), find(b))
+          if (ra < rb) parent(rb) = ra
+          else if (rb < ra) parent(ra) = rb
+        }
+        seen.keysIterator.map(n => (n, find(n)))
+      }.toDF("u", "v")
   }
 
-  /** Memoized per (session, dir): the label-propagation rounds run
-    * eagerly at construction, and both `dedup_survivors` and the curation
-    * pipeline consume the same cluster table.
+  /** Memoized per (session, dir): the component contraction runs once,
+    * and both `dedup_survivors` and the curation pipeline consume the
+    * same cluster table.
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     Memo.of(s, dir, "dedupClusters") {

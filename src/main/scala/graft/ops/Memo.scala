@@ -90,8 +90,10 @@ object Memo {
   private final case class Key(s: SparkSession, dir: String, tag: String)
 
   /** Sized for ~3 (session, dir) generations: one dir's full artifact
-    * surface is ~50 tags plus 10 source-table relations, and the bench
-    * touches two dirs per run (sf0.001 warm-up + the target). A bound
+    * surface is ~56 tags (the triangle edges, the k-gram table, two
+    * quality samples and the perplexity frame included) plus 10
+    * source-table relations, and the bench touches two dirs per run
+    * (sf0.001 warm-up + the target). A bound
     * near one generation's entry count would evict HOT artifacts mid-run
     * and silently recompute them.
     */

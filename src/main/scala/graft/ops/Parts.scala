@@ -1,11 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.storage.StorageLevel
 
 /** Size-derived partition counts for MATERIALIZED artifacts (Memo
-  * caches, per-invocation checkpoints).
+  * caches, the rows a loop or an offset pass stores with [[persisted]]).
   *
-  * Why this exists: a `.cache()`/`localCheckpoint()` freezes its frame's
+  * Why this exists: a `.cache()` or a persisted RDD freezes its frame's
   * partition count — AQE does not re-plan inside cached plans (by
   * default, and the global escape was measured and rejected; see
   * OPTIMIZATION_r14.md) — so an artifact built under the
@@ -57,4 +60,20 @@ private[graft] object Parts {
     */
   def sized(df: DataFrame, estBytes: Long): DataFrame =
     df.repartition(forBytes(estBytes))
+
+  /** The rows of `df`, stored for a loop or an offset pass that reads
+    * them more than once: an RDD-level persist (memory, spilling to
+    * disk) that fills on the first action and keeps its lineage, so a
+    * lost block recomputes from the plan instead of failing the query.
+    * The frame re-enters through a `LogicalRDD` leaf, so a plan over it
+    * stops there. Returns the frame and its RDD: a loop unpersists the
+    * RDD of a phase it supersedes, and the ContextCleaner releases any
+    * other once it is unreferenced.
+    */
+  def persisted(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (GraftSqlBridge.internalCreateDataFrame(df.sparkSession, rows, df.schema),
+      rows)
+  }
 }

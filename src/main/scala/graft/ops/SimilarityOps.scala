@@ -1377,23 +1377,40 @@ object SimilarityOps extends OpGroup {
   // k by construction, and the twin is the 100×-safe default for
   // graphs without that cap.
   // ---------------------------------------------------------------------
-  /** Materialized per execution (eager localCheckpoint): the triangle
-    * report references this frame from ~8 plan branches (ne, deg×2, the
-    * orientation join, and all three legs of the wedge/semi join), and
-    * Spark has no cross-branch common-subexpression elimination — each
-    * branch would re-run the corpus-edge DISTINCT shuffle (measured r13:
-    * the deg twin re-executed the knnJoin cache's map stage 16×, 137
-    * task-sec for a 10⁴-edge graph; guide §3.3 "materialising an
-    * intermediate truncates the plan"). The checkpoint is computed
-    * inside every invocation — nothing persists across runs — and at
-    * scale it is one edge-list pass instead of eight.
+  /** The canonical (a < b) kNN edge list, built once per (session, dir):
+    * the triangle report references it from ~8 plan branches (ne,
+    * deg×2, the orientation join, and all three legs of the wedge/semi
+    * join), and Spark has no cross-branch common-subexpression
+    * elimination — each branch would re-run the corpus-edge DISTINCT
+    * shuffle (measured r13: the deg twin re-executed the knnJoin cache's
+    * map stage 16×, 137 task-sec for a 10⁴-edge graph; guide §3.3
+    * "materialising an intermediate truncates the plan"). Sized like the
+    * kNN graph it projects.
     */
-  private def canonKnnEdges(s: SparkSession, dir: String): DataFrame =
-    Scratch.track(knnEdges(s, dir)
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint())
+  private[graft] def canonKnnEdges(s: SparkSession,
+      dir: String): DataFrame =
+    Memo.of(s, dir, "triangleCanonEdges") {
+      val canon = Parts.sized(knnEdges(s, dir)
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .distinct(), knnGraphBytes(s, dir)).cache()
+      canon.count()
+      canon
+    }
+
+  /** The canonical edges oriented by (degree, id), built once per
+    * (session, dir): they feed all three legs of the degree twin's
+    * wedge/semi join, so the canon⋈deg⋈deg orientation join runs once,
+    * not three times.
+    */
+  private[graft] def degreeOrientedKnnEdges(s: SparkSession,
+      dir: String): DataFrame =
+    Memo.of(s, dir, "triangleDegreeOrientedEdges") {
+      val ed = Parts.sized(degreeOriented(canonKnnEdges(s, dir)),
+        knnGraphBytes(s, dir)).cache()
+      ed.count()
+      ed
+    }
 
   /** Orient canonical (a < b) edges low→high by (degree, id) — the
     * arboricity-bounding total order: a hub is ranked LAST, so no path
@@ -1405,11 +1422,8 @@ object SimilarityOps extends OpGroup {
       .unionByName(canon.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
 
-  private[graft] def degreeOriented(canon: DataFrame): DataFrame =
-    degreeOrientedWith(canon, degreeOf(canon))
-
-  private def degreeOrientedWith(canon: DataFrame,
-      deg: DataFrame): DataFrame = {
+  private[graft] def degreeOriented(canon: DataFrame): DataFrame = {
+    val deg = degreeOf(canon)
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     canon
@@ -1465,17 +1479,13 @@ object SimilarityOps extends OpGroup {
   /** Degree-ordered twin: same report, wedge fan-out bounded by
     * arboricity (orient low-degree→high-degree) instead of max-degree.
     * The 100×-safe default for graphs without a per-node degree cap.
-    * One `deg` frame feeds both the orientation and the wedge total —
-    * the SQL twin's single materialized `deg` CTE, mirrored.
+    * The oriented edges are a Memo artifact; the wedge total reads the
+    * degree table of the cached canonical edges.
     */
   def triangleCountDeg(s: SparkSession, dir: String): DataFrame = {
     val canon = canonKnnEdges(s, dir)
-    val deg = degreeOf(canon)
-    // ed feeds all three legs of the wedge/semi join — checkpoint it so
-    // the canon⋈deg⋈deg orientation join runs once, not three times
-    triangleReport(canon, deg,
-      trianglesOriented(
-        Scratch.track(degreeOrientedWith(canon, deg).localCheckpoint())))
+    triangleReport(canon, degreeOf(canon),
+      trianglesOriented(degreeOrientedKnnEdges(s, dir)))
   }
 
   private lazy val triangleCountSql =

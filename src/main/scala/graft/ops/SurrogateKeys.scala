@@ -20,33 +20,21 @@ import org.apache.spark.sql.types.LongType
   */
 object SurrogateKeys {
 
-  /** `trackScratch = true` (default) registers the internal checkpoint
-    * with [[Scratch]] for release at the next query boundary — right for
-    * per-invocation query paths (w2/w4). Callers whose RESULT is cached
-    * across queries (dim_provider's Memo entry: a cache-miss recompute
-    * re-reads the checkpoint) must pass false and accept the bounded
-    * one-frame-per-(session, dir) retention.
-    */
   def withGlobalRowNumber(df: DataFrame, keyName: String,
-      order: Seq[Column], trackScratch: Boolean = true): DataFrame = {
+      order: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
-    // localCheckpoint materializes the sorted rows once (zipWithIndex's
-    // offset-count job would otherwise run the range sort twice); the
-    // Scratch registry (or, untracked, the ContextCleaner once the
-    // result becomes unreferenced) releases the blocks, so repeated
-    // calls don't accumulate executor storage for the life of the
-    // session. It also copies rows internally (the scan reuses one
-    // UnsafeRow per partition).
-    val sorted = df.repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint()
-    if (trackScratch) Scratch.track(sorted)
+    // The sorted rows are persisted (Parts.persisted) so zipWithIndex's
+    // offset-count job and the numbering pass share one range sort; the
+    // blocks keep their lineage and go to the ContextCleaner once the
+    // result is unreferenced.
+    val (sorted, rows) = Parts.persisted(df.repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*))
     val schema = sorted.schema.add(keyName, LongType, nullable = false)
     // Stay on InternalRow — boxing 800k+ wide rows through the public Row
     // API costs more than the numbering itself. JoinedRow reuse follows
     // the standard per-partition iterator contract (consumers copy when
     // they buffer).
-    val internal = sorted.queryExecution.toRdd.zipWithIndex()
+    val internal = rows.zipWithIndex()
       .mapPartitions { it =>
         val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
         val idxRow = new org.apache.spark.sql.catalyst.expressions

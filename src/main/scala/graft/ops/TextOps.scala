@@ -707,20 +707,30 @@ object TextOps extends OpGroup {
   // integer unless exactly ON one, so the <= boundary rule (boundary
   // doc → lower bucket) agrees across engines.
   // ---------------------------------------------------------------------
+  /** The narrow (doc_id, lang, score_milli) frame perplexityBuckets
+    * reads twice — the cut computation and the final assignment. Left
+    * lazy, Catalyst plans the whole scoring chain TWICE (two corpus
+    * passes, and the audit sees the doubled cross-join); built once per
+    * (session, dir), both read this cache and the scoring chain runs
+    * once. Sized by `Parts` like [[docLengths]]: one narrow row per
+    * document.
+    */
+  private[graft] def perplexityByLang(s: SparkSession,
+      dir: String): DataFrame =
+    Memo.of(s, dir, "perplexityByLang") {
+      val scored = termFreqs(s, dir).join(unigramLogProbs(s, dir), "tok")
+        .groupBy(col("doc_id"))
+        .agg(floor(sum(col("tf") * col("lp_micro")).cast("double") /
+          (sum("tf") * lit(1000.0))).cast("long").as("score_milli"))
+      val byLang = Parts.sized(
+        docs(s, dir).select(col("doc_id"), col("lang")).join(scored, "doc_id"),
+        Parts.sourceBytes(s, dir, "documents") / 8).cache()
+      byLang.count()
+      byLang
+    }
+
   def perplexityBuckets(s: SparkSession, dir: String): DataFrame = {
-    val scored = termFreqs(s, dir).join(unigramLogProbs(s, dir), "tok")
-      .groupBy(col("doc_id"))
-      .agg(floor(sum(col("tf") * col("lp_micro")).cast("double") /
-        (sum("tf") * lit(1000.0))).cast("long").as("score_milli"))
-    // localCheckpoint: `byLang` feeds BOTH the cut computation and the
-    // final assignment — left lazy, Catalyst plans the whole scoring
-    // chain TWICE (two corpus passes, and the audit sees the doubled
-    // cross-join). Materializing the narrow (doc_id, lang, score_milli)
-    // frame once makes the reuse explicit: cuts and assignment both read
-    // the checkpoint, the scoring chain runs exactly once.
-    val byLang = Scratch.track(docs(s, dir).select(col("doc_id"), col("lang"))
-      .join(scored, "doc_id")
-      .localCheckpoint())
+    val byLang = perplexityByLang(s, dir)
     val cuts = byLang.groupBy(col("lang")).agg(
       expr("percentile(score_milli, 0.3333333333333333)").as("c1"),
       expr("percentile(score_milli, 0.6666666666666666)").as("c2"))

@@ -29,18 +29,4 @@ object GraftSqlBridge {
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
-
-  /** Release the block-manager storage of a frame produced by
-    * `localCheckpoint()`. `Dataset.unpersist` only uncaches
-    * cache-manager (InMemoryRelation) entries — a checkpoint's RDD
-    * blocks are invisible to it and otherwise wait for a driver GC +
-    * ContextCleaner sweep. Matching the analyzed plan's LogicalRDD and
-    * unpersisting ITS rdd releases them deterministically; no-op for
-    * any other plan shape.
-    */
-  def releaseCheckpoint(df: Dataset[_]): Unit =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
-      case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
 }

@@ -311,7 +311,8 @@ class ExtensionsSpec extends AnyFunSuite {
       (2L, s"$passage ${uniq(2, 12)}"),
       (3L, uniq(3, 30)),
       (4L, s"$run8 ${uniq(4, 3)} $run8")).toDF("doc_id", "text")
-    val r = ops.DedupOps.substringSpansOver(docs)
+    val r = ops.DedupOps.substringSpansOver(docs,
+      ops.DedupOps.kgramRows(docs))
       .collect().map(x => x.getLong(0) ->
         ((x.getLong(1), x.getLong(2), x.getLong(3)))).toMap
     // docs 1+2: exactly the 10-token passage (3 overlapping 8-grams merge
@@ -339,7 +340,8 @@ class ExtensionsSpec extends AnyFunSuite {
       (3L, uniq(3, 30)),
       (4L, s"$run8 ${uniq(4, 3)} $run8"),
       (5L, messy)).toDF("doc_id", "text")
-    val r = ops.DedupOps.substringApplyOver(docs)
+    val r = ops.DedupOps.substringApplyOver(docs,
+      ops.DedupOps.kgramRows(docs))
       .collect().map(x => x.getLong(0) ->
         ((x.getLong(1), x.getLong(2), x.getString(3)))).toMap
     // doc 1 owns the passage (minimum (doc_id, pos)) — untouched; doc 2's
@@ -367,7 +369,8 @@ class ExtensionsSpec extends AnyFunSuite {
       .map(d => (d.toLong, s"$boiler " +
         (0 until 6).map(j => s"u${d}_$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val r = ops.DedupOps.substringApplyOver(docsDf)
+    val r = ops.DedupOps.substringApplyOver(docsDf,
+      ops.DedupOps.kgramRows(docsDf))
       .collect().map(x => x.getLong(0) ->
         ((x.getLong(1), x.getLong(2), x.getString(3)))).toMap
     assert(r.size == n)
@@ -1160,9 +1163,9 @@ class ExtensionsSpec extends AnyFunSuite {
     // entity resolution: the linkage chain is now a Memo-persisted layer
     // artifact (r10), so the tree-walked counters descend into the cached
     // BUILD plan — candidate variant join + closure link join, 2 hash
-    // exchanges past the localCheckpoint boundary, and never a loop join
-    // (a BNLJ means the SymSpell candidate path degraded to the naive
-    // theta-join). shufflesTree, not the string counter: the cached
+    // exchanges past the contraction's persisted-edges (LogicalRDD)
+    // boundary, and never a loop join (a BNLJ means the SymSpell
+    // candidate path degraded to the naive theta-join). shufflesTree, not the string counter: the cached
     // subtree reprints under multiple plan_ids once warm.
     val er = c("er_resolve")
     assert(er("nestedLoopJoins") == 0 && er("shufflesTree") <= 2,
@@ -2583,27 +2586,41 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(labeled > seeds, "propagation labeled nothing beyond the seeds")
   }
 
+  /** Drop every block of the cache behind each Memo frame in `frames`,
+    * as a lost executor would; asserts there were blocks and that none
+    * survived.
+    */
+  private def dropCached(what: String, frames: org.apache.spark.sql.DataFrame*)
+      : Unit = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    dropRdds(what, frames.flatMap(_.queryExecution.withCachedData
+      .collect { case r: InMemoryRelation =>
+        r.cacheBuilder.cachedColumnBuffers.id }))
+  }
+
+  /** Drop every block of the RDDs `ids` from all block managers. */
+  private def dropRdds(what: String, ids: Seq[Int]): Unit = {
+    import org.apache.spark.GraftTestBridge
+    val sc = spark.sparkContext
+    def blocks = ids.map(GraftTestBridge.rddBlocks(sc, _)).sum
+    assert(ids.nonEmpty && blocks > 0, s"$what has no cached blocks to drop")
+    ids.foreach(GraftTestBridge.removeRdd(sc, _))
+    assert(blocks == 0, s"$what blocks survived removeRdd")
+  }
+
+  /** A frame's rows as a sorted multiset, for order-free comparison. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   test("graph loops recompute a dropped kNN-graph cache to the same rows") {
     // A lost materialized block must recompute or fail loudly, never
     // return different rows. Drop the knnGraph Memo cache's blocks, as a
     // lost executor would, between the build and each call.
     import spark.implicits._
-    import org.apache.spark.GraftTestBridge
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val sc = spark.sparkContext
     val prWant = pagerankReplay()
     val lpWant = labelPropagationReplay()
-    val ids = graft.ops.SimilarityOps.knnJoin(spark, dir)
-      .queryExecution.withCachedData
-      .collect { case r: InMemoryRelation =>
-        r.cacheBuilder.cachedColumnBuffers.id }
-    assert(ids.nonEmpty, "knnGraph is not a cached frame")
-    def blocks = ids.map(GraftTestBridge.rddBlocks(sc, _)).sum
-    def drop(): Unit = {
-      assert(blocks > 0, "knnGraph has no cached blocks to drop")
-      ids.foreach(GraftTestBridge.removeRdd(sc, _))
-      assert(blocks == 0, "knnGraph blocks survived removeRdd")
-    }
+    def drop(): Unit = dropCached("knnGraph",
+      graft.ops.SimilarityOps.knnJoin(spark, dir))
     drop()
     val pr = graft.ops.SimilarityOps.pagerank(spark, dir)
       .as[(Long, Long)].collect().toMap
@@ -2614,6 +2631,52 @@ class ExtensionsSpec extends AnyFunSuite {
       .select("vec_id", "prop_label").as[(Long, Int)].collect().toMap
     assert(lp == lpWant,
       "label propagation changed after the kNN graph's blocks were lost")
+  }
+
+  test("corpus artifacts and contraction phases recompute dropped blocks") {
+    // Each Memo artifact that replaced a per-call checkpoint keeps its
+    // lineage: with its blocks dropped, every consumer op returns the
+    // rows of an undisturbed call.
+    import graft.ops.{DedupOps, SimilarityOps, TextOps}
+    val artifacts: Seq[(String, () => org.apache.spark.sql.DataFrame,
+        Seq[String])] = Seq(
+      ("triangle canonical edges",
+        () => SimilarityOps.canonKnnEdges(spark, dir),
+        Seq("sim_triangle_count", "sim_triangle_count_deg")),
+      ("triangle degree-oriented edges",
+        () => SimilarityOps.degreeOrientedKnnEdges(spark, dir),
+        Seq("sim_triangle_count_deg")),
+      ("corpus k-gram table", () => DedupOps.kgrams(spark, dir),
+        Seq("dedup_substring_spans", "dedup_substring_apply")),
+      ("quality sample", () => DedupOps.qualitySample(spark, dir,
+        DedupOps.qualitySampleBudget), Seq("dedup_quality_report")),
+      ("quality sample b125", () => DedupOps.qualitySample(spark, dir, 125L),
+        Seq("dedup_quality_report_b125")),
+      ("perplexity byLang", () => TextOps.perplexityByLang(spark, dir),
+        Seq("text_perplexity_buckets")))
+    artifacts.foreach { case (what, build, consumers) =>
+      val artifact = build()
+      consumers.foreach { op =>
+        val want = rowsOf(SparkEntry.queries(op)(spark, dir))
+        dropCached(what, artifact)
+        assert(rowsOf(SparkEntry.queries(op)(spark, dir)) == want,
+          s"$op changed after the $what blocks were lost")
+      }
+    }
+    // star contraction's persisted phase rows: drop the final phase's
+    // (and the input edges') blocks behind the returned labels
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    val n = 64L
+    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val (labels, phases) = DedupOps.starContraction(chain, localThreshold = 0L)
+    assert(phases > 0, "threshold 0 must run the distributed phases")
+    val want = (0L until n).map(i => (i, 0L)).toSet
+    assert(labels.as[(Long, Long)].collect().toSet == want)
+    dropRdds("star contraction phase", labels.queryExecution.analyzed
+      .collect { case r: LogicalRDD => r.rdd.id })
+    assert(labels.as[(Long, Long)].collect().toSet == want,
+      "labels changed after the contraction phase's blocks were lost")
   }
 
   test("plan shapes: round-4 graph/sampling operators pinned") {

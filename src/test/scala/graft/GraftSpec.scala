@@ -146,6 +146,8 @@ class GraftSpec extends AnyFunSuite {
       "text_kl_mixture" -> 1, // corpus-total scalar row
       "text_lm_bigram_score" -> 1, // vocab-size scalar row
       "text_lm_score" -> 1, // vocab-size scalar row
+      "text_perplexity_buckets" -> 1, // lm_score's vocab-size scalar row,
+                                      // inside the cached byLang build
       "text_pmi_bigrams" -> 2, // unigram/bigram total rows
       "text_tfidf" -> 1) // doc-count scalar row
     // Global (unpartitioned) windows move ALL rows to one task — the
@@ -358,22 +360,30 @@ class GraftSpec extends AnyFunSuite {
     val found = codeSites(
       java.util.regex.Pattern.compile("\\.persist\\(|\\.cache\\(\\)"))
     val classified: Map[String, (Int, String)] = Map(
-      "ops/SimilarityOps.scala" -> ((14,
-        "13 Memo-owned top frames (ivfCells input+probe table, mipsAug, " +
+      "ops/SimilarityOps.scala" -> ((16,
+        "15 Memo-owned top frames (ivfCells input+probe table, mipsAug, " +
           "knnGraph, embNorms x5 one shared key, clusteredEmbNorms, " +
-          "clusteredEdges, hnswL1Edges, bruteTruthTopk) + ivfModel's " +
+          "clusteredEdges, hnswL1Edges, bruteTruthTopk, the triangle " +
+          "twins' canonical and degree-oriented edges) + ivfModel's " +
           "k-means input, released in its own try/finally")),
-      "ops/TextOps.scala" -> ((4,
+      "ops/TextOps.scala" -> ((5,
         "Memo-owned: the term index's three frames (termIndex.tf, " +
-          "termIndex.df, termIndex.dl), hardNegatives")),
+          "termIndex.df, termIndex.dl), hardNegatives, " +
+          "perplexityBuckets' scored byLang frame")),
       "ops/Curate.scala" -> ((4,
         "Memo-owned: curatedCorpus, classifierFilter, " +
           "shardedTrainingSet, manifestDocDigest")),
       "ops/PqOps.scala" -> ((1, "Memo-owned: pqCodes")),
-      "ops/DedupOps.scala" -> ((8,
+      "ops/DedupOps.scala" -> ((10,
         "Memo-owned: shingleRows, bandTable, cappedBands, shingles, " +
           "cappedShingleRows, cappedShingleSets, clusters, " +
-          "contamShingleRows")),
+          "contamShingleRows, the quality sample (one key per budget), " +
+          "the corpus k-gram table")),
+      "ops/Parts.scala" -> ((1,
+        "Parts.persisted: the rows a loop or an offset pass reads more " +
+          "than once (starContraction's phases, SurrogateKeys' sorted " +
+          "rows); lineage kept, a superseded phase unpersisted in its " +
+          "loop, the rest released by the ContextCleaner")),
       "ops/AnalyticsOps.scala" -> ((2,
         "Memo-owned: attributionJoined, attributionPer (the r8 leak, " +
           "fixed by routing through Memo)")),
@@ -403,38 +413,17 @@ class GraftSpec extends AnyFunSuite {
         diffs.mkString("\n  "))
   }
 
-  test("checkpoint sweep: every localCheckpoint site is classified") {
+  test("checkpoint sweep: no localCheckpoint site") {
     // An eager localCheckpoint's blocks live on one executor and have no
     // lineage behind them: a lost block fails the query instead of
-    // recomputing. This sweep pins the exact per-file site count against
-    // the classification below, so a NEW site fails until it is either
-    // replaced by recoverable lineage (a shuffle, a Memo cache) or
-    // classified here with its release story — the cache-retention
-    // sweep's discipline applied to checkpoints.
+    // recomputing. Frames read more than once are Memo caches (built
+    // once per session and dir) or Parts.persisted rows, both of which
+    // keep their lineage.
     val found = codeSites(java.util.regex.Pattern.compile(
       "\\.localCheckpoint\\("))
-    val classified: Map[String, (Int, String)] = Map(
-      "ops/DedupOps.scala" -> ((10,
-        "Scratch-tracked: the dedup quality sample, ExactSubstr's k-gram " +
-          "table (x2). Released at the site (GraftSqlBridge" +
-          ".releaseCheckpoint): starContraction's superseded phase edges " +
-          "(x4 with its nodes and first edges, which back the returned " +
-          "labels) and min-label propagation's edges and superseded " +
-          "rounds (x3; the final round may back the Memo-cached clusters " +
-          "and is left to the ContextCleaner)")),
-      "ops/TextOps.scala" -> ((1,
-        "Scratch-tracked: perplexityBuckets' scored byLang frame")),
-      "ops/SimilarityOps.scala" -> ((2,
-        "Scratch-tracked: the triangle twins' canonical edge list and " +
-          "degree-oriented edges")),
-      "ops/SurrogateKeys.scala" -> ((1,
-        "withGlobalRowNumber's range-sorted rows: Scratch-tracked, or " +
-          "left to the ContextCleaner when the caller opts out")))
-    val diffs = siteDiffs(found, classified, "localCheckpoint")
-    assert(diffs.isEmpty,
-      "unclassified localCheckpoint sites — keep lineage recoverable " +
-        "(co-partition the loop, cache through Memo), or classify here " +
-        "with the release story:\n  " + diffs.mkString("\n  "))
+    assert(found.isEmpty,
+      "localCheckpoint sites — keep lineage recoverable (cache through " +
+        s"Memo, or Parts.persisted for a loop's rows): $found")
   }
 
   test("one session builder: only Conf.scala calls SparkSession.builder") {

@@ -369,7 +369,8 @@ object PropertySpec extends Properties("graft") {
       val df = docTokens.zipWithIndex
         .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
         .toDF("doc_id", "text")
-      val got = ops.DedupOps.substringSpansOver(df)
+      val got = ops.DedupOps.substringSpansOver(df,
+          ops.DedupOps.kgramRows(df))
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
       // model: global k-gram counts -> duplicated start positions ->
@@ -403,7 +404,8 @@ object PropertySpec extends Properties("graft") {
       val df = docTokens.zipWithIndex
         .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
         .toDF("doc_id", "text")
-      val got = ops.DedupOps.substringApplyOver(df)
+      val got = ops.DedupOps.substringApplyOver(df,
+          ops.DedupOps.kgramRows(df))
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
       // model: dup grams -> canonical (min (doc_id,pos)) occurrence per
@@ -434,13 +436,10 @@ object PropertySpec extends Properties("graft") {
 
   property("connected components equal union-find on random graphs") =
     Prop.forAll(Gen.listOfN(20, edgeGen)) { es =>
-      // both paths — star contraction (default) and the legacy min-label
-      // propagation — must agree with the union-find model exactly
+      // the default path (the single-task finish) must agree with the
+      // union-find model exactly
       val got = ops.DedupOps
         .connectedComponents(es.toDF("doc_a", "doc_b"))
-        .as[(Long, Long)].collect().toMap
-      val gotProp = ops.DedupOps
-        .connectedComponents(es.toDF("doc_a", "doc_b"), useStar = false)
         .as[(Long, Long)].collect().toMap
       // distributed star phases too (threshold 0 disables the
       // single-task union-find finish the default path would take)
@@ -458,7 +457,7 @@ object PropertySpec extends Properties("graft") {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val model = parent.keys.map(x => x -> find(x)).toMap
-      got == model && gotProp == model && gotStar == model
+      got == model && gotStar == model
     }
 
   property("dot rewrite output is bit-identical to the interpreted HOF fold") =
